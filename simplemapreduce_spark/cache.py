@@ -20,6 +20,7 @@ process only ever holds entries for the live application.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -41,6 +42,31 @@ def table_stamp(sf_dir: str, name: str) -> str:
         return "nostat"
 
 
+def _memo_store(
+    df: DataFrame, key: str, stamp: str, store: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """The memo lifecycle shared by ``memo_persist`` and
+    ``memo_local_checkpoint``: return the entry for (application, key,
+    stamp) if there is one; otherwise drop entries of other (stopped)
+    applications, unpersist this key's entries under other stamps, and
+    memoize ``store(df)``."""
+    app = df.sparkSession.sparkContext.applicationId
+    hit = _MEMO.get((app, key, stamp))
+    if hit is not None:
+        return hit
+    for old in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[old]
+    for old in [k for k in _MEMO if k[0] == app and k[1] == key and k[2] != stamp]:
+        try:
+            _MEMO[old].unpersist()
+        except Exception:
+            pass
+        del _MEMO[old]
+    out = store(df)
+    _MEMO[(app, key, stamp)] = out
+    return out
+
+
 def memo_persist(
     df: DataFrame,
     key: str,
@@ -56,20 +82,7 @@ def memo_persist(
     (``table_stamp``) so an in-place fixture rewrite invalidates the
     entry — the superseded entry is unpersisted, not just dropped.
     """
-    app = df.sparkSession.sparkContext.applicationId
-    hit = _MEMO.get((app, key, stamp))
-    if hit is not None:
-        return hit
-    for old in [k for k in _MEMO if k[0] != app]:
-        del _MEMO[old]
-    for old in [k for k in _MEMO if k[0] == app and k[1] == key and k[2] != stamp]:
-        try:
-            _MEMO[old].unpersist()
-        except Exception:
-            pass
-        del _MEMO[old]
-    _MEMO[(app, key, stamp)] = df.persist(level)
-    return df
+    return _memo_store(df, key, stamp, lambda d: d.persist(level))
 
 
 def clear_memo() -> None:
@@ -101,20 +114,5 @@ def memo_local_checkpoint(df: DataFrame, key: str, stamp: str = "") -> DataFrame
     full tree on EVERY downstream query construction, which for a
     3-round windowed chain costs more driver time than the node-sized
     data itself. Same (application, key, stamp) lifecycle as
-    memo_persist; superseded entries just drop (checkpoint storage is
-    freed with the RDD by the ContextCleaner)."""
-    app = df.sparkSession.sparkContext.applicationId
-    hit = _MEMO.get((app, key, stamp))
-    if hit is not None:
-        return hit
-    for old in [k for k in _MEMO if k[0] != app]:
-        del _MEMO[old]
-    for old in [k for k in _MEMO if k[0] == app and k[1] == key and k[2] != stamp]:
-        try:
-            _MEMO[old].unpersist()
-        except Exception:
-            pass
-        del _MEMO[old]
-    out = df.localCheckpoint(eager=True)
-    _MEMO[(app, key, stamp)] = out
-    return out
+    memo_persist, including the unpersist of a superseded entry."""
+    return _memo_store(df, key, stamp, lambda d: d.localCheckpoint(eager=True))

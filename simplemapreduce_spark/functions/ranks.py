@@ -71,6 +71,16 @@ def with_global_order(
     ``order_col`` must be numeric and non-null. Results are EXACT —
     ties share a bucket, within-bucket windows order by the full key,
     and offsets add the earlier buckets' totals.
+
+    The ``running_sums`` and ``total_sums`` source columns must be
+    non-null too: a bucket whose within-bucket prefix is all NULL
+    yields NULL where the single-partition window would yield the
+    earlier buckets' total.
+
+    Buckets are assigned on ``order_col`` cast to double. For int64 or
+    decimal order values that differ only beyond 2^53, rows collapse
+    into few buckets: results stay exact, but the work no longer
+    spreads across partitions.
     """
     nb = n_buckets or default_bucket_count(df)
     gcols = list(group_cols)

@@ -402,7 +402,7 @@ def q_text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     global ROW_NUMBER semantics but computes it with the two-level
     bucketed machinery (functions/ranks.py — range-bucket the score,
     rank per bucket in parallel, add the earlier buckets' counts from
-    the tiny checkpointed totals table) instead of the former
+    the tiny totals table) instead of the former
     single-partition window that serialized the |docs|-row score table
     onto one task at any scale. Exact oracle parity is unchanged; an
     approx_percentile-cutoff variant would trade that exactness away
@@ -1320,9 +1320,9 @@ def q_text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     count; both cumulative sums over the |docs|-row joined table run
     through the two-level bucketed prefix machinery
     (functions/ranks.py — per-bucket running sums in parallel plus
-    the earlier buckets' totals from the tiny checkpointed offsets
-    table) instead of the former global ORDER BY doc_id window that
-    serialized the |docs|-row curve onto one task at any scale. Same
+    the earlier buckets' totals from the tiny offsets table) instead
+    of the former global ORDER BY doc_id window that serialized the
+    |docs|-row curve onto one task at any scale. Same
     exact integers; at 100 TB you additionally sample checkpoint docs
     instead of emitting every point, which subsamples the same
     ordered frame."""

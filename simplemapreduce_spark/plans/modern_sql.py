@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
+from simplemapreduce_spark.session import scoped_conf
 from simplemapreduce_spark.sources.tables import load_table, register_tables
 
 
@@ -52,27 +53,29 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     control flow took the same path at every scale factor. Each
     statement inside the block is still a full Catalyst plan —
     scripting changes orchestration, not execution."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     register_tables(spark, sf_dir, ("orders",))
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE cutoff DOUBLE;
-          DECLARE is_big BOOLEAN;
-          SET cutoff = (SELECT MAX(o_totalprice) * 0.5 FROM orders);
-          SET is_big = (SELECT COUNT(*) > 5000 FROM orders);
-          IF is_big THEN
-            SELECT o_orderpriority AS grp, CAST(COUNT(*) AS BIGINT) AS n_above
-            FROM orders WHERE o_totalprice > cutoff
-            GROUP BY o_orderpriority;
-          ELSE
-            SELECT o_orderstatus AS grp, CAST(COUNT(*) AS BIGINT) AS n_above
-            FROM orders WHERE o_totalprice > cutoff
-            GROUP BY o_orderstatus;
-          END IF;
-        END
-        """
-    )
+    # spark.sql runs a script eagerly and returns its last result as a
+    # local relation, so the conf is needed only during this call.
+    with scoped_conf(spark, "spark.sql.scripting.enabled", "true"):
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE cutoff DOUBLE;
+              DECLARE is_big BOOLEAN;
+              SET cutoff = (SELECT MAX(o_totalprice) * 0.5 FROM orders);
+              SET is_big = (SELECT COUNT(*) > 5000 FROM orders);
+              IF is_big THEN
+                SELECT o_orderpriority AS grp, CAST(COUNT(*) AS BIGINT) AS n_above
+                FROM orders WHERE o_totalprice > cutoff
+                GROUP BY o_orderpriority;
+              ELSE
+                SELECT o_orderstatus AS grp, CAST(COUNT(*) AS BIGINT) AS n_above
+                FROM orders WHERE o_totalprice > cutoff
+                GROUP BY o_orderstatus;
+              END IF;
+            END
+            """
+        )
 
 
 @query(

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.plans.relational_ext import _scratch_dir
+from simplemapreduce_spark.session import scoped_conf
 from simplemapreduce_spark.sources.tables import load_table
 
 
@@ -426,21 +427,17 @@ def q_source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distributed at any scale while each task lists a meaningful
     # slice. Scoped to this read and restored (the conf is
     # runtime-settable; listing happens eagerly inside load()).
-    disc_key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
-    prev_disc = spark.conf.get(disc_key, None)
-    spark.conf.set(disc_key, str(spark.sparkContext.defaultParallelism * 2))
-    try:
+    with scoped_conf(
+        spark,
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        spark.sparkContext.defaultParallelism * 2,
+    ):
         files = (
             spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.txt")
             .option("recursiveFileLookup", "true")
             .load(path)
         )
-    finally:
-        if prev_disc is None:
-            spark.conf.unset(disc_key)
-        else:
-            spark.conf.set(disc_key, prev_disc)
     return files.select(
         F.regexp_extract(F.input_file_name(), r"doc_id=(\d+)", 1)
         .cast("long")

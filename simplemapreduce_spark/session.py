@@ -11,6 +11,9 @@ or on a cluster by changing only the master URL.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -64,6 +67,38 @@ def get_spark(app_name: str = "simplemapreduce_spark", *, cpus: str | None = Non
 
 
 _SCRATCH_GCED = False
+
+
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: object) -> Iterator[None]:
+    """Set the runtime SQL conf ``key`` to ``value`` for the body of the
+    block only (``value=None`` leaves the conf untouched). On exit the
+    previous value comes back, and a key that was unset is unset again.
+
+    The session conf is shared by every query on the session, so one
+    process-wide lock serializes all scoped overrides: two threads
+    scoping the same key cannot interleave their set/restore pairs and
+    leave the wrong value behind. The lock is reentrant because scopes
+    nest (the transformWithState query scopes its state-store provider
+    around a drain that scopes the shuffle partitions). A streaming
+    query needs its override only around ``start()``: StreamExecution
+    clones the session conf synchronously inside it."""
+    if value is None:
+        yield
+        return
+    with _CONF_LOCK:
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, str(value))
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 _SHIPPED_APPS: set[str] = set()

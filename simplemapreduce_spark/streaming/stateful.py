@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from simplemapreduce_spark.catalog import query
+from simplemapreduce_spark.session import scoped_conf
 from simplemapreduce_spark.streaming.windows import (
     run_stream_to_table,
     stream_events,
@@ -175,22 +176,12 @@ def tws_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transformWithState requires the RocksDB provider (runtime-settable);
     # scope the override to this stream so unrelated streaming queries in
     # the shared session keep the default provider.
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev_provider = spark.conf.get(provider_key)
-    except Exception:
-        prev_provider = None
-    spark.conf.set(
-        provider_key,
+    with scoped_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    ):
         out = run_stream_to_table(updates, "append", state_partitions=stream_state_partitions(spark, sf_dir))
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
     from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())

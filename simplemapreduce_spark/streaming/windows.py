@@ -22,9 +22,7 @@ checkpointed, partitioned state.
 from __future__ import annotations
 
 import os
-import threading
 import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +30,7 @@ from pyspark.sql import types as T
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import event_time_to_ntz, ntz_as_event_time
+from simplemapreduce_spark.session import scoped_conf
 
 # Streaming file sources require an explicit schema. events.ts is
 # plain timestamp[us] parquet (no tz flag) — TIMESTAMP_NTZ to Spark,
@@ -129,31 +128,6 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     return max(2, min(int(target), spark.sparkContext.defaultParallelism))
 
 
-_STREAM_CONF_LOCK = threading.Lock()
-
-
-@contextmanager
-def stream_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Scope ``spark.sql.shuffle.partitions`` = ``n`` to a streaming
-    ``start()`` call issued inside the block (None = leave untouched).
-    StreamExecution clones the session conf synchronously inside
-    start(), so restoring immediately after the block is safe; the
-    process-wide lock keeps concurrent drains from interleaving their
-    set/restore pairs (ADVICE r10 #3). Shared by run_stream_to_table
-    and the self-draining streaming queries that cannot use it
-    (processing-time-trigger sources)."""
-    if n is None:
-        yield
-        return
-    with _STREAM_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def run_stream_to_table(
     df: DataFrame, output_mode: str, state_partitions: int | None = None
 ) -> DataFrame:
@@ -167,10 +141,10 @@ def run_stream_to_table(
     conf) synchronously inside ``start()`` on Spark 4.x, verified
     empirically (a drain started at 4 with the conf restored to 32
     immediately after start() wrote a 4-partition state store; pinned
-    by tests/test_optimization_r10.py). The mutation is additionally
-    guarded by a process-wide lock (ADVICE r10 #3) so two drains
-    started from different driver threads cannot interleave their
-    set/restore pairs and leak the wrong count into the session."""
+    by tests/test_optimization_r10.py). The override goes through
+    ``session.scoped_conf``, whose process-wide lock keeps drains
+    started from different driver threads from leaking the wrong
+    count into the session."""
     spark = df.sparkSession
     name = f"smr_stream_{int(time.monotonic_ns())}"
     writer = (
@@ -179,7 +153,7 @@ def run_stream_to_table(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    with stream_shuffle_partitions(spark, state_partitions):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", state_partitions):
         q = writer.start()
     try:
         # availableNow terminates once drained; a False return means the
@@ -901,7 +875,7 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.defaultParallelism,
         ),
     )
-    with stream_shuffle_partitions(spark, n_state):
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", n_state):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)

@@ -63,7 +63,7 @@ def test_udtf_gap_and_freshness_match_under_nonutc_session(spark, sf_dir):
         # seconds via unix_timestamp over NTZ columns
         "q_ts_asof_tolerance",
         # found by the round-6 FULL-catalog TZ-invariance sweep
-        # (tools/tz_invariance_sweep.py): F.date_trunc on NTZ returns
+        # (tools/conf_invariance_sweep.py tz): F.date_trunc on NTZ returns
         # LTZ through a session-zone cast — now date_trunc_ntz
         "q_scalar_date",
         "q_ts_ohlc",

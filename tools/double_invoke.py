@@ -7,12 +7,12 @@ queries stage artifacts under /tmp/smr_scratch keyed by table stamp,
 and a concurrent process overwriting a staged dir mid-read produces
 false mismatches (observed: q_source_text_lines / q_join_bucketed).
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-import os
-
-os.environ["PYTHONPATH"] = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = REPO
 from simplemapreduce_spark import catalog
 from simplemapreduce_spark.session import get_spark
 

@@ -1,9 +1,10 @@
 """Local replica of the grading driver's gate (.claude/skills/verify).
 
-Loads /root/repo/__spark_entry__.py module-by-path (exactly as the driver
-does — run this from a scratch cwd, not /root/repo), smoke-checks entry()
-at sf0.001, then for every queries() entry runs the Spark plan at sf0.01
-side-by-side with its oracle_sql() in DuckDB and compares sorted column
+Loads the checkout's __spark_entry__.py module-by-path (exactly as the
+driver does — run this from a scratch cwd, not the checkout),
+smoke-checks entry() at sf0.001, then for every queries() entry runs
+the Spark plan at sf0.01 side-by-side with its oracle_sql() in DuckDB
+and compares sorted column
 names + row count + order-insensitive stringified rows, PLUS normalized
 output-type parity (round-6 lesson: the real driver's value hash is
 type-sensitive — DuckDB HUGEINT vs Spark BIGINT fails it even when every
@@ -11,7 +12,7 @@ stringified cell matches, so a stringified compare alone is not a
 faithful replica).
 
 Usage:
-    cd /tmp && python /root/repo/tools/driver_sim.py [--only q_a,q_b] [--first N]
+    python <checkout>/tools/driver_sim.py [--only q_a,q_b] [--first N]
 Exit code 0 iff every checked query passes (rows-only queries count as
 pass when they run and schema is stable).
 """
@@ -24,6 +25,8 @@ import json
 import os
 import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -83,13 +86,13 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    os.environ.setdefault("PYTHONPATH", "/root/repo")
-    sys.path.insert(0, "/root/repo")
+    os.environ.setdefault("PYTHONPATH", REPO)
+    sys.path.insert(0, REPO)
 
     from tools.type_parity import type_mismatches  # noqa: PLC0415
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

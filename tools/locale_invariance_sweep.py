@@ -21,7 +21,7 @@ Each child runs every catalog query and records sha256(sorted
 stringified rows) + row count; the parent diffs the two maps. Python's
 own str methods are locale-independent, so the JVM is the only moving
 part. Do NOT run concurrently with the pytest suite or another sweep
-(shared /tmp/smr_scratch staging — see tz_invariance_sweep.py).
+(shared /tmp/smr_scratch staging — see conf_invariance_sweep.py).
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 os.environ.setdefault("PYTHONPATH", REPO)
 

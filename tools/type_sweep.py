@@ -9,7 +9,7 @@ though every stringified cell matched), and 141 queries have never
 received that type-sensitive signal.
 
 Usage:
-    cd /tmp && python /root/repo/tools/type_sweep.py [--sf DIR] [--dump]
+    python <checkout>/tools/type_sweep.py [--sf DIR] [--dump]
 
 ``--dump`` prints every (query, column, duck_type, spark_type) pair, so
 the distribution of cross-engine pairs can be audited by eye; default
@@ -23,8 +23,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ.setdefault("PYTHONPATH", REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
