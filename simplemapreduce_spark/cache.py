@@ -11,10 +11,18 @@ already cached data" warning and re-pinning executor storage
 ``memo_persist`` keys the persist per (Spark application, logical key):
 the first invocation persists, later ones reuse the same cached
 DataFrame object — the DataFrame-level analogue of a fragment cache.
-Queries that share a subtree (e.g. minhash-LSH and containment both
-hash the same document shingles) share one cache entry too. Entries
-from a previous (stopped) Spark application are evicted lazily; a
-process only ever holds entries for the live application.
+Entries from a previous (stopped) Spark application are evicted
+lazily; a process only ever holds entries for the live application.
+
+The rule: ONE MEMO KEY, ONE BUILDER. A hit returns the entry stored
+first and ignores the plan passed in, so two call sites that each
+spell a key would silently share whichever plan ran first. Every key
+is therefore passed to ``memo_persist`` / ``memo_local_checkpoint`` at
+exactly one call site, inside the function that builds its subtree
+(e.g. ``plans/dedup.lsh_index`` for the MinHash signature and band
+tables, ``plans/graph.copurchase_graph`` for the co-purchase edges);
+a query that needs the subtree calls that builder and never rebuilds
+the subtree under its key. ``tests/test_memo_keys.py`` enforces this.
 """
 
 from __future__ import annotations

@@ -1,8 +1,9 @@
-"""Vector math over ``array<float>`` embedding columns.
+"""Vector math over ``array<float>`` embedding columns, and the in-row
+pair expansion of an array column.
 
-All JVM-side higher-order functions (``aggregate`` / ``zip_with``) —
-no Python in the hot path, so cosine scoring stays inside whole-stage
-codegen and scales linearly with executor count.
+All JVM-side higher-order functions (``aggregate`` / ``zip_with`` /
+``transform``) — no Python in the hot path, so cosine scoring stays
+inside whole-stage codegen and scales linearly with executor count.
 """
 
 from __future__ import annotations
@@ -25,3 +26,17 @@ def l2_norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def array_pairs(arr: str, fields: str) -> Column:
+    """Explode every pair ``(x, y)`` of array column ``arr`` with ``x``
+    before ``y``, one row per pair, as ``struct(<fields>)`` — ``fields``
+    is a SQL struct body over the lambda variables ``x`` and ``y``, e.g.
+    ``"x AS u, y AS v"``. Over a sorted, distinct array every pair comes
+    out once with ``x < y``: the row-local C(k, 2) expansion that
+    replaces a quadratic self-join on the grouping key (basket pairs,
+    LSH bucket candidates)."""
+    return F.expr(
+        f"explode(flatten(transform({arr}, (x, i) ->"
+        f" transform(slice({arr}, i + 2, size({arr})), y -> struct({fields})))))"
+    )

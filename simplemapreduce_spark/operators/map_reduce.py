@@ -111,33 +111,3 @@ def map_reduce(
     out = reduce_pairs(map_pairs(df, map_f), reduce_f, n_partitions)
     return out.orderBy(F.col("key").asc()) if sort else out
 
-
-def map_reduce_rdd(
-    df: DataFrame,
-    map_f: MapF,
-    reduce_f: ReduceF,
-    n_partitions: int | None = None,
-    sort: bool = True,
-) -> DataFrame:
-    """RDD-level twin of map_reduce() for callers who want the classic
-    pair-RDD surface (flatMap → groupByKey → mapValues). Same output
-    contract; the DataFrame path is preferred (Tungsten + Arrow), this
-    exists for API parity with Spark's RDD lineage of the MapReduce
-    model.
-
-    groupByKey (not reduceByKey/combineByKey) is deliberate: reduceF is
-    holistic — called once per key with ALL values, the reference
-    contract (/root/reference/src/common/common_reduce.go:56,85) — so
-    there is nothing associative to combine map-side.
-    """
-    from simplemapreduce_spark.session import ensure_package_shipped
-
-    spark = df.sparkSession
-    ensure_package_shipped(spark)
-    pairs = df.rdd.flatMap(lambda row: list(map_f(row.asDict())))
-    grouped = (
-        pairs.groupByKey(n_partitions) if n_partitions else pairs.groupByKey()
-    )
-    reduced = grouped.map(lambda kv: (kv[0], reduce_f(kv[0], list(kv[1]))))
-    out = spark.createDataFrame(reduced, KV_SCHEMA)
-    return out.orderBy(F.col("key").asc()) if sort else out

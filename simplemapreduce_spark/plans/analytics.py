@@ -15,8 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist, table_stamp
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import SESSION_GAP_MICROS, date_trunc_ntz, epoch_micros
+from simplemapreduce_spark.functions.vectors import array_pairs
 from simplemapreduce_spark.sources.tables import load_table
 
 
@@ -160,6 +162,29 @@ MIN_PAIR_SUPPORT = 2
 TOP_PAIRS = 20
 
 
+def order_baskets(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The co-purchase basket tables: ``(order_parts, baskets)``.
+
+    ``order_parts`` is the distinct (l_orderkey, l_partkey) table,
+    memoized under ``basket.order_parts`` — the one builder of that
+    key. It feeds four branches of q_market_basket_pairs (baskets,
+    both marginals, the order count) and the co-purchase edge table of
+    plans/graph.py; Spark has no cross-branch subtree reuse, so it is
+    persisted once — at 100 TB this is the materialized basket table
+    every itemset pass starts from. ``baskets`` is each order's sorted
+    distinct part array ``parts``."""
+    li = load_table(spark, sf_dir, "lineitem")
+    op = memo_persist(
+        li.select("l_orderkey", "l_partkey").distinct(),
+        f"basket.order_parts:{sf_dir}",
+        table_stamp(sf_dir, "lineitem"),
+    )
+    baskets = op.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_set("l_partkey")).alias("parts")
+    )
+    return op, baskets
+
+
 @query(
     "q_market_basket_pairs",
     oracle=f"""
@@ -198,29 +223,11 @@ def q_market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     part marginals and the order count are tiny aggregates AQE
     broadcasts into the lift join. Deterministic top-{TOP} on
     (support DESC, part_a, part_b) compiles to TakeOrderedAndProject."""
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # The distinct order-part table feeds FOUR branches (baskets, both
-    # marginals, the order count); Spark has no cross-branch subtree
-    # reuse, so persist it once — at 100 TB this is the materialized
-    # basket table every itemset pass starts from.
-    op = memo_persist(
-        li.select("l_orderkey", "l_partkey").distinct(),
-        f"basket.order_parts:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
+    op, baskets = order_baskets(spark, sf_dir)
     n_orders = op.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     pc = op.groupBy("l_partkey").agg(F.count("*").alias("n_with"))
-    baskets = op.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    pairs = F.expr(
-        "explode(flatten(transform(parts, (x, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), y -> struct(x AS part_a, y AS part_b)))))"
-    )
     ab = (
-        baskets.select(pairs.alias("p"))
+        baskets.select(array_pairs("parts", "x AS part_a, y AS part_b").alias("p"))
         .select("p.part_a", "p.part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count("*").alias("support"))
@@ -1079,8 +1086,6 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("from_type", "to_type")
         .agg(F.count("*").alias("n"))
     )
-    from simplemapreduce_spark.cache import memo_local_checkpoint, table_stamp
-
     # |types|^2 rows; three rounds + totals all read it — clip the
     # corpus-window lineage once.
     counted = memo_local_checkpoint(

@@ -25,7 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.plans.dedup import _SQL_DOC_SHINGLES, doc_shingle_arrays
+from simplemapreduce_spark.plans.dedup import (
+    _SQL_DOC_SHINGLES,
+    _SQL_MINHASH_BANDS,
+    doc_shingle_arrays,
+    h1_sets,
+    lsh_index,
+)
 from simplemapreduce_spark.sources.tables import load_table
 
 # Deterministic stand-in for a benchmark/eval set: every 10th document.
@@ -133,8 +139,6 @@ FUZZY_CONTAM_THRESHOLD = 0.98
 
 
 def _fuzzy_oracle() -> str:
-    from simplemapreduce_spark.plans.dedup import _SQL_MINHASH_BANDS
-
     return f"""
     WITH {_SQL_MINHASH_BANDS},
     cand AS (
@@ -169,8 +173,8 @@ def q_decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the shared MinHash-LSH index — the defense q_decontaminate_ngram
     cannot provide when a benchmark item was paraphrased or lightly
     edited into the corpus (the contamination mode actually observed
-    in web-scale training sets). Reuses the memoized signature/band
-    tables from plans/dedup.py (one index build serves dedup AND
+    in web-scale training sets). Reads the memoized signature/band
+    tables of plans/dedup.lsh_index (one index build serves dedup AND
     decontam in a session — how a production pipeline shares its LSH
     index across hygiene passes).
 
@@ -190,9 +194,7 @@ def q_decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: corpus-side work is the one memoized signature scan
     plus a broadcast equi-join and one hash agg by train doc; nothing
     scales with |corpus| x |eval|."""
-    from simplemapreduce_spark.plans.dedup import doc_hash_arrays, minhash_bands_df
-
-    bands = minhash_bands_df(spark, sf_dir)
+    doc_hp, bands = lsh_index(spark, sf_dir)
     train_b = bands.filter(F.col("doc_id") % 10 != 0).alias("t")
     eval_b = bands.filter(F.col("doc_id") % 10 == 0).alias("e")
     cand = (
@@ -206,10 +208,7 @@ def q_decontam_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    hs = doc_hash_arrays(spark, sf_dir).select(
-        "doc_id",
-        F.array_distinct(F.expr("transform(hp, b -> b.h1)")).alias("hs"),
-    )
+    hs = h1_sets(doc_hp)
     st = hs.select(F.col("doc_id").alias("train_id"), F.col("hs").alias("hs_t"))
     se = hs.select(F.col("doc_id").alias("eval_id"), F.col("hs").alias("hs_e"))
     inter = F.size(F.array_intersect("hs_t", "hs_e"))

@@ -30,7 +30,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.cache import memo_persist, table_stamp
+from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist, table_stamp
+from simplemapreduce_spark.functions.vectors import array_pairs
+from simplemapreduce_spark.plans.analytics import order_baskets
 from simplemapreduce_spark.sources.tables import load_table
 
 _N_NATIONS = 25  # TPC-H nation is a fixed 25-row table at every SF
@@ -246,6 +248,36 @@ q_graph_shortest_path.__doc__ = q_graph_shortest_path.__doc__.format(
 )
 
 
+def copurchase_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The co-purchase graph shared by q_graph_triangles,
+    q_graph_common_neighbors, q_graph_kcore and
+    q_graph_label_propagation: ``(edges, adjacency)``.
+
+    ``edges`` holds the canonical (u < v) part pairs co-ordered in at
+    least 2 orders, expanded row-locally from the memoized basket table
+    (plans/analytics.order_baskets) and memoized under
+    ``graph.copurchase_edges`` — the one builder of that key, so one
+    build serves all four queries in a session. Several join branches
+    of each query reference it and Spark has no cross-branch subtree
+    reuse, hence the persist. ``adjacency`` is the symmetric
+    ``(node, nbr)`` union: every edge in both directions."""
+    _op, baskets = order_baskets(spark, sf_dir)
+    e = memo_persist(
+        baskets.select(array_pairs("parts", "x AS u, y AS v").alias("p"))
+        .select("p.u", "p.v")
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("s"))
+        .filter(F.col("s") >= 2)
+        .select("u", "v"),
+        f"graph.copurchase_edges:{sf_dir}",
+        table_stamp(sf_dir, "lineitem"),
+    )
+    adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
+        e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
+    )
+    return e, adj
+
+
 @query(
     "q_graph_triangles",
     oracle="""
@@ -293,38 +325,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost ~4 s of fixed latency on the near-empty sf0.1 graph — the
     right trade for an operator whose hard case is density, and
     invisible on a real cluster where stage dispatch amortizes. Both wedge and
-    closing joins are hash equi-joins; the basket/edge subtree is
-    shared with q_market_basket_pairs via the same memoized order-part
-    table, and per-node counts are one final explode + groupBy of the
-    (tiny) triangle set."""
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
-
-    li = load_table(spark, sf_dir, "lineitem")
-    op = memo_persist(
-        li.select("l_orderkey", "l_partkey").distinct(),
-        f"basket.order_parts:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
-    baskets = op.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair_expr = F.expr(
-        "explode(flatten(transform(parts, (x, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), y -> struct(x AS u, y AS v)))))"
-    )
-    # Three join branches reference the edge table; Spark has no
-    # cross-branch subtree reuse, so persist it once (same rationale
-    # and cache key discipline as the basket/TF-IDF subtrees).
-    e = memo_persist(
-        baskets.select(pair_expr.alias("p"))
-        .select("p.u", "p.v")
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("s"))
-        .filter(F.col("s") >= 2)
-        .select("u", "v"),
-        f"graph.copurchase_edges:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
+    closing joins are hash equi-joins; the edge table is
+    copurchase_graph's memoized build, whose basket table is the one
+    q_market_basket_pairs uses, and per-node counts are one final
+    explode + groupBy of the (tiny) triangle set."""
+    e, _adj = copurchase_graph(spark, sf_dir)
     # Total order (deg, node): unique apex per triangle. Degrees come
     # from the same memoized edge table (u<v canonical, symmetric).
     deg = (
@@ -455,9 +460,9 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline derives next to the triangle counts it shares its edge
     table with.
 
-    Reuses the memoized support-≥2 edge table (q_graph_triangles'
-    `graph.copurchase_edges` key — one build serves both queries in a
-    session). Edges are canonical u<v; adjacency is the symmetric
+    Edges and adjacency come from copurchase_graph (the memoized
+    support-≥2 edge table — one build serves all four co-purchase
+    graph queries in a session). Edges are canonical u<v; adjacency is the symmetric
     union, so a wedge join on the shared neighbor with a<b counts
     every common neighbor exactly once, and an anti-join against the
     canonical edges keeps only predicted (absent) links. Jaccard's
@@ -478,32 +483,7 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge-then-anti-join needs chained shuffles its one-map-one-reduce
     barrier (/root/reference/src/mapreduce/master.go:77-78) cannot
     schedule."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = memo_persist(
-        li.select("l_orderkey", "l_partkey").distinct(),
-        f"basket.order_parts:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
-    baskets = op.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair_expr = F.expr(
-        "explode(flatten(transform(parts, (x, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), y -> struct(x AS u, y AS v)))))"
-    )
-    e = memo_persist(
-        baskets.select(pair_expr.alias("p"))
-        .select("p.u", "p.v")
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("s"))
-        .filter(F.col("s") >= 2)
-        .select("u", "v"),
-        f"graph.copurchase_edges:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
-    adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
+    e, adj = copurchase_graph(spark, sf_dir)
     deg = adj.groupBy("node").agg(F.count("*").alias("d"))
     # Hub cap on the WEDGE MIDDLE (the shared neighbor): each middle
     # node contributes at most its 32 lowest-id adjacent nodes to
@@ -611,36 +591,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joined to the previous survivor set — O(|E|) per round, the
     exact shape of the SSSP relaxation; survivor sets are node-sized
     (broadcastable when small, AQE decides). All exact integers."""
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
-
-    li = load_table(spark, sf_dir, "lineitem")
-    op = memo_persist(
-        li.select("l_orderkey", "l_partkey").distinct(),
-        f"basket.order_parts:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
-    baskets = op.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair_expr = F.expr(
-        "explode(flatten(transform(parts, (x, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), y -> struct(x AS u, y AS v)))))"
-    )
-    e = memo_persist(
-        baskets.select(pair_expr.alias("p"))
-        .select("p.u", "p.v")
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("s"))
-        .filter(F.col("s") >= 2)
-        .select("u", "v"),
-        f"graph.copurchase_edges:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
-    adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
-    from simplemapreduce_spark.cache import memo_local_checkpoint
-
+    _e, adj = copurchase_graph(spark, sf_dir)
     # Survivor sets are node-sized but chain |E|-joins; per-round
     # lineage truncation caps both the per-branch recompute and the
     # per-run Catalyst cost of the grown tree (same fix, same
@@ -803,37 +754,10 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the node-sized label table, a (node, label) hash count,
     and a per-node argmax window partitioned by node (bounded by that
     node's distinct neighbor labels — degree-bounded, never
-    corpus-sized). The edge table is the memoized co-purchase build
-    shared with triangles/k-core/link-prediction; label state between
-    rounds is node-sized."""
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
-
-    li = load_table(spark, sf_dir, "lineitem")
-    op = memo_persist(
-        li.select("l_orderkey", "l_partkey").distinct(),
-        f"basket.order_parts:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
-    baskets = op.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair_expr = F.expr(
-        "explode(flatten(transform(parts, (x, i) ->"
-        " transform(slice(parts, i + 2, size(parts)), y -> struct(x AS u, y AS v)))))"
-    )
-    e = memo_persist(
-        baskets.select(pair_expr.alias("p"))
-        .select("p.u", "p.v")
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("s"))
-        .filter(F.col("s") >= 2)
-        .select("u", "v"),
-        f"graph.copurchase_edges:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
-    )
-    adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
+    corpus-sized). The adjacency is copurchase_graph's memoized
+    co-purchase build, shared with triangles/k-core/link-prediction;
+    label state between rounds is node-sized."""
+    _e, adj = copurchase_graph(spark, sf_dir)
     labels = adj.select("node").distinct().select("node", F.col("node").alias("label"))
     # Each round's label table is NODE-sized but derives from an
     # |E|-join chain; the trace below reads every round's state from
@@ -842,8 +766,6 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (quadratic in rounds; measured 3.7 s -> the dominant bench cost).
     # Persisting each round caps the whole trace at one |E|-join per
     # round, the same lineage discipline as q_dedup_clusters.
-    from simplemapreduce_spark.cache import memo_local_checkpoint
-
     labels = memo_local_checkpoint(
         labels, f"graph.lpa_labels0:{sf_dir}", table_stamp(sf_dir, "lineitem")
     )

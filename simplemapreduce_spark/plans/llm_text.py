@@ -22,7 +22,7 @@ empties dropped).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
@@ -105,6 +105,29 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _predicted_lang() -> Column:
+    """The stopword-hit language predictor of q_text_langid and
+    q_text_langid_confusion: count each language's stopwords among the
+    lower-cased tokens of ``text``; the language with the most hits
+    wins, ties go en > de > es, and a text with no hits is
+    ``unknown``."""
+    toks = tokens("text")
+
+    def hits(words: tuple[str, ...]):
+        arr = F.array(*[F.lit(w) for w in words])
+        return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
+
+    en = hits(("the", "and", "of", "is", "a"))
+    de = hits(("der", "und", "die", "das", "ist"))
+    es = hits(("el", "la", "de", "los", "es"))
+    return (
+        F.when((en >= de) & (en >= es) & (en > 0), "en")
+        .when((de >= es) & (de > 0), "de")
+        .when(es > 0, "es")
+        .otherwise("unknown")
+    )
+
+
 @query(
     "q_text_langid",
     oracle=f"""
@@ -131,22 +154,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram-free baseline; a real pipeline would swap in fastText via a
     pandas UDF — the surface stays identical)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-
-    def hits(words: tuple[str, ...]):
-        arr = F.array(*[F.lit(w) for w in words])
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
-
-    en = hits(("the", "and", "of", "is", "a"))
-    de = hits(("der", "und", "die", "das", "ist"))
-    es = hits(("el", "la", "de", "los", "es"))
-    predicted = (
-        F.when((en >= de) & (en >= es) & (en > 0), "en")
-        .when((de >= es) & (de > 0), "de")
-        .when(es > 0, "es")
-        .otherwise("unknown")
-    )
-    return d.select("doc_id", "lang", predicted.alias("predicted_lang"))
+    return d.select("doc_id", "lang", _predicted_lang().alias("predicted_lang"))
 
 
 @query(
@@ -1026,23 +1034,8 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (true, predicted); output is |langs|^2-bounded regardless of
     corpus size."""
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    toks = tokens("text")
-
-    def hits(words: tuple[str, ...]):
-        arr = F.array(*[F.lit(w) for w in words])
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
-
-    en = hits(("the", "and", "of", "is", "a"))
-    de = hits(("der", "und", "die", "das", "ist"))
-    es = hits(("el", "la", "de", "los", "es"))
-    predicted = (
-        F.when((en >= de) & (en >= es) & (en > 0), "en")
-        .when((de >= es) & (de > 0), "de")
-        .when(es > 0, "es")
-        .otherwise("unknown")
-    )
     return (
-        d.select("lang", predicted.alias("predicted_lang"))
+        d.select("lang", _predicted_lang().alias("predicted_lang"))
         .groupBy("lang", "predicted_lang")
         .agg(F.count("*").alias("n"))
         .orderBy("lang", "predicted_lang")

@@ -14,13 +14,13 @@ explode/groupBy — which Catalyst executes with partial aggregation
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import distinct_tokens, explode_tokens
+from simplemapreduce_spark.scratch import scratch_dir
 from simplemapreduce_spark.sources.tables import load_table
 
 _TOKENS_FROM_DOCS = """
@@ -105,8 +105,7 @@ def q_source_text_whole_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from simplemapreduce_spark.sources.text import read_whole_files
 
     docs = load_table(spark, sf_dir, "documents").select("text")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), "smr_scratch", f"docs_text_{sf_tag}")
+    path = scratch_dir("docs_text", sf_dir)
     # 4 files stands in for the reference's one-input-file-per-map-task
     # layout; at scale read_whole_files is only for many-small-files
     # corpora (each file is non-splittable).
@@ -140,8 +139,7 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from simplemapreduce_spark.sources.text import read_lines
 
     docs = load_table(spark, sf_dir, "documents").select("text")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), "smr_scratch", f"docs_lines_{sf_tag}")
+    path = scratch_dir("docs_lines", sf_dir)
     docs.write.mode("overwrite").text(path)
     lines = read_lines(spark, path)
     return lines.agg(
@@ -297,7 +295,6 @@ def mr_distributed_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference would run this as mapF = regex test + emit
     (/root/reference/src/mapreduce/common_map.go:64-71); here the scan,
     filter, and merge are one declarative plan."""
-    from simplemapreduce_spark.scratch import scratch_dir
     from simplemapreduce_spark.sources.text import read_lines
 
     docs = load_table(spark, sf_dir, "documents").select("text")

@@ -64,6 +64,26 @@ def dense_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _top_k(
+    scored: DataFrame, k: int, *keep: str, rank: str = "rank", order: F.Column | None = None
+) -> DataFrame:
+    """Each query's ``k`` best neighbors, numbered ``rank`` from 1
+    under the total order (``order``, neighbor_id) — ``order`` defaults
+    to the rounded cosine DESC. This is the deterministic ranking
+    contract of the whole similarity family, the Spark twin of every
+    oracle's ``ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY
+    cos_sim DESC, neighbor_id)``. Returns (query_id, neighbor_id,
+    *keep, rank)."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc() if order is None else order, F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select("query_id", "neighbor_id", *keep, rank)
+    )
+
+
 @query(
     "q_sim_topk_bruteforce",
     oracle=f"""
@@ -81,13 +101,7 @@ def q_sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ANN baseline: broadcast the query set, score every
     candidate, per-query top-k via window rank. One pass over the
     corpus, no shuffle of the big side before scoring."""
-    scored = dense_scored(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(dense_scored(spark, sf_dir), TOP_K, "cos_sim")
 
 
 def _sign_bucket_sql() -> str:
@@ -151,12 +165,7 @@ def q_sim_topk_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity(F.col("qe"), F.col("e")), 4).alias("cos_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, 3, "cos_sim")
 
 
 @query(
@@ -193,12 +202,7 @@ def q_sim_l2_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id", F.col("vec_id").alias("neighbor_id"), F.round(l2, 4).alias("l2_dist")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("l2_dist"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "l2_dist", "rank")
-    )
+    return _top_k(scored, TOP_K, "l2_dist", order=F.col("l2_dist"))
 
 
 N_CENTROIDS = 8
@@ -316,12 +320,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity(F.col("qe"), F.col("e")), 4).alias("cos_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= IVF_TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, IVF_TOP_K, "cos_sim")
 
 
 _D2_SQL = (
@@ -478,12 +477,7 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity(F.col("qe"), F.col("e")), 4).alias("cos_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= IVF_TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(scored, IVF_TOP_K, "cos_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -1093,15 +1087,13 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_eval_top3(spark: SparkSession, sf_dir: str, gt_rank: str, approx_rank: str):
-    """Shared ground-truth / approximate top-3 construction for the LSH
-    retrieval evals (q_sim_lsh_recall_eval and q_sim_ndcg_eval): the
-    exact pass broadcasts the sampled query set (vec_id < 4*N_QUERIES)
-    over one corpus scan, the approximate pass is the sign-bucket
-    equi-join, and both rank by the deterministic (rounded-cosine DESC,
-    neighbor_id) contract. Extracted so the two evals' retrievers can
-    never drift apart — tests/test_quality_bounds.py asserts their hit
-    counts agree, which is only structural if they share this code."""
+def _sign_bucket_scores(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(exact, bucketed) rounded-cosine scores of the sampled query set
+    (vec_id < 4*N_QUERIES) — the two retrievers the sign-bucket LSH
+    evals compare: ``exact`` scores every other corpus vector (the
+    query set broadcast over one corpus scan), ``bucketed`` only the
+    vectors in the query's sign bucket (the equi-join). Both are
+    (query_id, neighbor_id, cos_sim)."""
     raw = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
     v = raw.select(
         "vec_id",
@@ -1113,32 +1105,28 @@ def _lsh_eval_top3(spark: SparkSession, sf_dir: str, gt_rank: str, approx_rank: 
         F.col("e").alias("qe"),
         F.col("bucket").alias("qbucket"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-
-    def top3(scored: DataFrame, rank_name: str) -> DataFrame:
-        return (
-            scored.withColumn(rank_name, F.row_number().over(w))
-            .filter(F.col(rank_name) <= 3)
-            .select("query_id", "neighbor_id", rank_name)
-        )
-
     sim = F.round(cosine_similarity(F.col("qe"), F.col("e")), 4).alias("cos_sim")
-    gt = top3(
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), sim
-        ),
-        gt_rank,
+    exact = v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), sim
     )
-    approx = top3(
-        v.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        ).select("query_id", F.col("vec_id").alias("neighbor_id"), sim),
-        approx_rank,
-    )
-    return gt, approx
+    bucketed = v.join(
+        F.broadcast(q),
+        (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), sim)
+    return exact, bucketed
 
+
+def _lsh_eval_top3(spark: SparkSession, sf_dir: str, gt_rank: str, approx_rank: str):
+    """Shared ground-truth / approximate top-3 construction for the LSH
+    retrieval evals (q_sim_lsh_recall_eval and q_sim_ndcg_eval): the
+    exact pass broadcasts the sampled query set (vec_id < 4*N_QUERIES)
+    over one corpus scan, the approximate pass is the sign-bucket
+    equi-join, and both rank by the deterministic (rounded-cosine DESC,
+    neighbor_id) contract. Extracted so the two evals' retrievers can
+    never drift apart — tests/test_quality_bounds.py asserts their hit
+    counts agree, which is only structural if they share this code."""
+    exact, bucketed = _sign_bucket_scores(spark, sf_dir)
+    return _top_k(exact, 3, rank=gt_rank), _top_k(bucketed, 3, rank=approx_rank)
 
 
 @query(
@@ -1267,43 +1255,10 @@ def q_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final per-query top-2 run on |queries| x bucket-occupancy
     rows. Same deterministic (rounded-sim, id) ranking contract as
     the rest of the similarity family."""
-    raw = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    v = raw.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("e"),
-        _sign_bucket_col().alias("bucket"),
-    )
-    q = v.filter(F.col("vec_id") < N_QUERIES * 4).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("bucket").alias("qbucket"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    gt = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qe"), F.col("e")), 4).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    bucketed = v.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_similarity(F.col("qe"), F.col("e")), 4).alias("cos_sim"),
-    )
+    exact, bucketed = _sign_bucket_scores(spark, sf_dir)
+    gt = _top_k(exact, 3).drop("rank")
     negatives = bucketed.join(gt, ["query_id", "neighbor_id"], "left_anti")
-    return (
-        negatives.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 2)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
-    )
+    return _top_k(negatives, 2, "cos_sim").withColumn("rank", F.col("rank").cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -1962,20 +1917,10 @@ def q_sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages concurrently inside one job."""
     from simplemapreduce_spark.plans.llm_text import lexical_scored
 
-    def ranked(scored: DataFrame) -> DataFrame:
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _RRF_DEPTH)
-            .select("query_id", "neighbor_id", "rank")
-        )
-
-    lex = ranked(
-        lexical_scored(spark, sf_dir).filter(F.col("query_id") < N_QUERIES)
+    lex = _top_k(
+        lexical_scored(spark, sf_dir).filter(F.col("query_id") < N_QUERIES), _RRF_DEPTH
     )
-    den = ranked(dense_scored(spark, sf_dir))
+    den = _top_k(dense_scored(spark, sf_dir), _RRF_DEPTH)
     pooled = lex.unionAll(den)
     rrf = pooled.groupBy("query_id", "neighbor_id").agg(
         F.count("*").alias("n_lists"),

@@ -13,7 +13,7 @@ docstring carries its 100 TB shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.functions.time import date_trunc_ntz
@@ -544,6 +544,30 @@ def q_chi_square_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ab_variant() -> Column:
+    """Experiment arm of ``user_id``: "A" when the first hex digit of
+    md5(user_id) is below 8, else "B" — a deterministic 50/50 split,
+    engine-portable and stable under reruns."""
+    return F.when(
+        F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8", "A"
+    ).otherwise("B")
+
+
+def _ab_cents_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cents, a, b): purchases per exact integer-cents amount in arms
+    A and B — the price-domain-bounded table both two-sample tests
+    (q_ks_two_sample, q_mannwhitney_u) run their ordered windows on."""
+    e = load_table(spark, sf_dir, "events")
+    p = e.filter(F.col("event_type") == "purchase").select(
+        _ab_variant().alias("variant"),
+        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+    )
+    return p.groupBy("cents").agg(
+        F.sum((F.col("variant") == "A").cast("int")).alias("a"),
+        F.sum((F.col("variant") == "B").cast("int")).alias("b"),
+    )
+
+
 @query(
     "q_ab_test_ztest",
     oracle="""
@@ -598,14 +622,11 @@ def q_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, no driver-side stats. Counts stay exact integers; the
     division/sqrt happen once at the 1-row boundary, rounded there."""
     e = load_table(spark, sf_dir, "events")
-    variant = F.when(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8", "A"
-    ).otherwise("B")
     assigned = e.groupBy("user_id").agg(
         F.max(
             ((F.col("event_type") == "purchase") & (F.col("value") > 180)).cast("int")
         ).alias("converted")
-    ).select(variant.alias("variant"), "converted")
+    ).select(_ab_variant().alias("variant"), "converted")
     arms = assigned.groupBy("variant").agg(
         F.count("*").alias("n"), F.sum("converted").alias("conv")
     )
@@ -755,18 +776,7 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes one partial+final hash aggregation. All counts are
     exact integers; the two divisions happen per aggregated row with
     an identical formula on both engines."""
-    e = load_table(spark, sf_dir, "events")
-    variant = F.when(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8", "A"
-    ).otherwise("B")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        variant.alias("variant"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
-    )
-    per_value = p.groupBy("cents").agg(
-        F.sum((F.col("variant") == "A").cast("int")).alias("a"),
-        F.sum((F.col("variant") == "B").cast("int")).alias("b"),
-    )
+    per_value = _ab_cents_counts(spark, sf_dir)
     tot = per_value.agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
     run = W.orderBy("cents").rowsBetween(W.unboundedPreceding, W.currentRow)
     cdf = per_value.select(
@@ -897,18 +907,7 @@ def q_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic are exact-integer sums pushed through one shared double
     formula. U is a multiple of 0.5 exactly (halves are exact
     doubles), rounded at 1 decimal for display."""
-    e = load_table(spark, sf_dir, "events")
-    variant = F.when(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8", "A"
-    ).otherwise("B")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        variant.alias("variant"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
-    )
-    pv = p.groupBy("cents").agg(
-        F.sum((F.col("variant") == "A").cast("int")).alias("a"),
-        F.sum((F.col("variant") == "B").cast("int")).alias("b"),
-    )
+    pv = _ab_cents_counts(spark, sf_dir)
     t = F.col("a") + F.col("b")
     c_before = F.sum(t).over(
         W.orderBy("cents").rowsBetween(W.unboundedPreceding, -1)

@@ -1,8 +1,9 @@
 """Scratch-directory layout for sink round-trip queries.
 
-One helper so every sink path (csv/json/orc/xml round-trips, the
-foreachBatch parquet sink) lands under the same GC-managed root
-(session.gc_scratch cleans stale runs).
+``scratch_root`` is the one definition of the GC-managed root every
+sink path (csv/json/orc/xml/text round-trips, the foreachBatch parquet
+sink, the shipped package zip) lands under; session.gc_scratch cleans
+stale runs from it.
 """
 
 from __future__ import annotations
@@ -11,9 +12,13 @@ import os
 import tempfile
 
 
+def scratch_root() -> str:
+    return os.path.join(tempfile.gettempdir(), "smr_scratch")
+
+
 def scratch_dir(kind: str, sf_dir: str) -> str:
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), "smr_scratch", f"{kind}_{sf_tag}")
+    return os.path.join(scratch_root(), f"{kind}_{sf_tag}")
 
 
 def staged_once(kind: str, sf_dir: str, stamp: str, writer) -> str:

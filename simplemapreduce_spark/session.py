@@ -126,8 +126,10 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     import tempfile
     import zipfile
 
+    from simplemapreduce_spark.scratch import scratch_root
+
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    scratch = os.path.join(tempfile.gettempdir(), "smr_scratch")
+    scratch = scratch_root()
     zip_path = os.path.join(scratch, "simplemapreduce_spark_pkg.zip")
     os.makedirs(scratch, exist_ok=True)
     fd, tmp_path = tempfile.mkstemp(suffix=".zip", dir=scratch)
@@ -158,10 +160,11 @@ def gc_scratch(max_age_hours: float = 24.0) -> int:
     of any live concurrent session (always fresh) are never touched.
     Returns the number of entries removed."""
     import shutil
-    import tempfile
     import time
 
-    scratch = os.path.join(tempfile.gettempdir(), "smr_scratch")
+    from simplemapreduce_spark.scratch import scratch_root
+
+    scratch = scratch_root()
     if not os.path.isdir(scratch):
         return 0
     cutoff = time.time() - max_age_hours * 3600

@@ -402,24 +402,16 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_table(agg, "complete", state_partitions=stream_state_partitions(spark, sf_dir))
 
 
-@query(
-    "q_stream_stream_join",
-    oracle="""
-    SELECT c.user_id,
-           c.event_id AS click_id, p.event_id AS purchase_id,
-           date_diff('second', c.ts, p.ts) AS secs_to_purchase
-    FROM events c JOIN events p
-      ON p.user_id = c.user_id
-     AND c.event_type = 'click' AND p.event_type = 'purchase'
-     AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-    """,
-)
-def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with event-time bounds: clicks joined
-    to purchases by the same user within 30 minutes. Watermarks on both
-    sides bound the join state (clicks can be dropped once no purchase
-    within the window can still arrive) — the canonical funnel join,
-    running incrementally."""
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The stream-stream join family's shared plan, drained to a table:
+    the click stream ``(c_user, click_id, c_ts)`` joined (``how``) to
+    the purchase stream ``(p_user, purchase_id, p_ts)`` on the same
+    user and a purchase within 30 minutes after the click. Both sides
+    carry a 1-hour watermark, which, together with the time bound,
+    lets the state store evict a click once no qualifying purchase can
+    still arrive. Used by the inner, left-outer, left-semi and
+    full-outer queries, which differ only in ``how`` and their final
+    projection."""
     ev = stream_events(spark, sf_dir)
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -444,9 +436,30 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_user") == F.col("c_user"))
         & (F.col("p_ts") > F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
+        how,
     )
-    out = run_stream_to_table(joined, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    return run_stream_to_table(joined, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+
+
+@query(
+    "q_stream_stream_join",
+    oracle="""
+    SELECT c.user_id,
+           c.event_id AS click_id, p.event_id AS purchase_id,
+           date_diff('second', c.ts, p.ts) AS secs_to_purchase
+    FROM events c JOIN events p
+      ON p.user_id = c.user_id
+     AND c.event_type = 'click' AND p.event_type = 'purchase'
+     AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
+    """,
+)
+def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join with event-time bounds: clicks joined
+    to purchases by the same user within 30 minutes. Watermarks on both
+    sides bound the join state (clicks can be dropped once no purchase
+    within the window can still arrive) — the canonical funnel join,
+    running incrementally."""
+    out = _click_purchase_join(spark, sf_dir, "inner")
     return out.select(
         F.col("c_user").alias("user_id"),
         "click_id",
@@ -506,33 +519,7 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the inner join — state bounded by the
     watermark on both sides, keyed-state symmetric hash join; the
     outer variant only adds the eviction-time null emission."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("p_ts") > F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    )
-    out = run_stream_to_table(joined, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = _click_purchase_join(spark, sf_dir, "left_outer")
     return out.select(
         F.col("c_user").alias("user_id"),
         "click_id",
@@ -926,29 +913,7 @@ def q_stream_stream_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same watermark/time-bound discipline as the inner join (state
     evicted once no qualifying purchase can still arrive); the batch
     oracle is the literal EXISTS subquery."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("p_ts") > F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_semi",
-    )
-    out = run_stream_to_table(joined, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = _click_purchase_join(spark, sf_dir, "left_semi")
     return out.select(
         F.col("c_user").alias("user_id"),
         "click_id",
@@ -1021,33 +986,7 @@ def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant — state on both sides bounded by the watermark and the
     30-minute interval condition; full-outer adds only the
     eviction-time null emission on each side."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("p_ts") > F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "full_outer",
-    )
-    out = run_stream_to_table(joined, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = _click_purchase_join(spark, sf_dir, "full_outer")
     return out.select(
         F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
         "click_id",

@@ -7,17 +7,36 @@ Usage: python tools/dump_plans.py <round> <tag> [query ...]
 
 Plans are captured at sf0.01 (plan shapes are SF-independent apart from
 AQE runtime rewrites, same rationale as gen_plan_manifest.py) unless
-$SPARK_GRAFT_SF_DIR overrides.
+$SPARK_GRAFT_SF_DIR overrides. Per-session counters are normalized
+before writing, so a before/after diff shows only real plan changes:
+expression ids (``#123``, ``#123L``) become ``#_``, exchange ids
+(``[plan_id=45]``) ``[plan_id=_]``, RDD ids (``MapPartitionsRDD[325]``)
+``RDD[_]``, and the numeric suffix PySpark gives Python lambda
+variables (``lambda x_97#_``) ``_N``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+_COUNTERS = (
+    (re.compile(r"#\d+L?"), "#_"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=_]"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    (re.compile(r"(lambda \w+?)_\d+(?=#)"), r"\1_N"),
+)
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _COUNTERS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -42,7 +61,7 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        plan = buf.getvalue()
+        plan = normalize(buf.getvalue())
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
