@@ -101,10 +101,13 @@ DRIVER_PRIORITY: tuple[str, ...] = (
 def load_all() -> None:
     """Import every plan module so its queries register, then move the
     DRIVER_PRIORITY queries to the front of the registration order."""
-    # Imports are side-effectful by design (decorator registration).
+    # Imports are side-effectful by design (decorator registration),
+    # and their order is the registration order drivers see; it must
+    # stay stable (relational_ext registers before bucketing).
     from simplemapreduce_spark.operators import cogroup, ml_lsh, py_udtf, skew  # noqa: F401
     from simplemapreduce_spark.plans import (  # noqa: F401
         analytics,
+        relational_ext,
         bucketing,
         curation,
         decontam,
@@ -119,7 +122,6 @@ def load_all() -> None:
         mr_compat,
         quality,
         relational,
-        relational_ext,
         relational_more,
         sampling,
         similarity,

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.plans.relational_ext import _scratch_dir
+from simplemapreduce_spark.scratch import scratch_dir, staged_once
 from simplemapreduce_spark.sources.tables import load_table
 
 N_BUCKETS = 8
@@ -37,7 +37,7 @@ def _bucketed_table(
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     name = f"smr_bucketed_{table}_{sf_tag}"
-    path = _scratch_dir(f"bucketed_{table}", sf_dir)
+    path = scratch_dir(f"bucketed_{table}", sf_dir)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
         load_table(spark, sf_dir, table)
@@ -280,12 +280,12 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: the fact table is laid out
-    Hive-partitioned by ship month (written once per sf to scratch,
-    reused across calls), and the join against a SELECTIVE derived
-    dimension (urgent-order months of 1996 — inside the fixture's
-    1995-2001 span; the round-4 vacuity audit caught the original
-    1992 predicate matching nothing, which made the whole join
-    0 = 0 trivially green) lets Spark inject a
+    Hive-partitioned by ship month (staged once per lineitem version
+    by scratch.staged_once, reused across calls), and the join
+    against a SELECTIVE derived dimension (urgent-order months of
+    1996 — inside the fixture's 1995-2001 span; the round-4 vacuity
+    audit caught the original 1992 predicate matching nothing, which
+    made the whole join 0 = 0 trivially green) lets Spark inject a
     runtime `dynamicpruning` subquery into the fact scan — only the
     matching month directories are read. At 100 TB this is the
     difference between scanning 12/84 months and scanning everything:
@@ -297,22 +297,15 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the identical join on the raw parquet —
     layout is an execution concern, the answer must not change.
     Revenue accumulates as exact integer cents (_rcents)."""
-    import os
 
-    from simplemapreduce_spark.sources.tables import table_path
-
-    path = _scratch_dir("dpp_lineitem_by_month", sf_dir)
-    marker = os.path.join(path, "_smr_stamp")
-    stamp = str(os.path.getmtime(table_path(sf_dir, "lineitem")))
-    if not (os.path.exists(marker) and open(marker).read() == stamp):
-        li = load_table(spark, sf_dir, "lineitem").select(
+    def write_fact(p: str) -> None:
+        load_table(spark, sf_dir, "lineitem").select(
             "l_extendedprice",
             "l_discount",
             F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
-        )
-        li.write.mode("overwrite").partitionBy("ship_month").parquet(path)
-        with open(marker, "w") as fh:
-            fh.write(stamp)
+        ).write.mode("overwrite").partitionBy("ship_month").parquet(p)
+
+    path = staged_once("dpp_lineitem_by_month", sf_dir, "lineitem", write_fact)
     fact = spark.read.parquet(path)
     o = load_table(spark, sf_dir, "orders")
     dim = (

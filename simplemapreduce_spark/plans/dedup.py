@@ -28,6 +28,7 @@ from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import tokens
 from simplemapreduce_spark.functions.vectors import array_pairs
 from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist, table_stamp
+from simplemapreduce_spark.scratch import staged_once
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
 N_HASHES = 16
@@ -476,29 +477,15 @@ def q_dedup_minhash_lsh_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     it with column pruning instead of competing for cache memory.
     Results are identical to q_dedup_minhash_lsh (same oracle).
 
-    The checkpoint is stamped with the source fixture's mtime+size and
-    rebuilt when stale — the freshness rule an orchestrated pipeline
-    gets from its scheduler."""
-    import os
-
-    from simplemapreduce_spark.scratch import scratch_dir
-
-    path = scratch_dir("minhash_sig", sf_dir)
-    stamp = table_stamp(sf_dir, "documents")
-    stamp_file = path + ".stamp"
-    fresh = False
-    try:
-        with open(stamp_file) as f:
-            # stamp AND data dir must both exist: gc_scratch removes
-            # them independently, and a stamp surviving its data dir
-            # must not mask the missing checkpoint.
-            fresh = f.read() == stamp and os.path.isdir(path)
-    except OSError:
-        pass
-    if not fresh:
-        doc_hash_arrays(spark, sf_dir).write.mode("overwrite").parquet(path)
-        with open(stamp_file, "w") as f:
-            f.write(stamp)
+    The checkpoint is staged through scratch.staged_once, stamped with
+    the source fixture's mtime+size and rebuilt when stale — the
+    freshness rule an orchestrated pipeline gets from its scheduler."""
+    path = staged_once(
+        "minhash_sig",
+        sf_dir,
+        "documents",
+        lambda p: doc_hash_arrays(spark, sf_dir).write.mode("overwrite").parquet(p),
+    )
     return minhash_verified_pairs(spark.read.parquet(path))
 
 

@@ -9,14 +9,12 @@ engines (left fold, no engine-chosen summation order).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from simplemapreduce_spark.catalog import query
+from simplemapreduce_spark.scratch import scratch_dir
 from simplemapreduce_spark.sources.tables import load_table
 
 
@@ -199,11 +197,6 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared helper (promoted to its own module; re-exported here for the
-# sibling plan modules that import it).
-from simplemapreduce_spark.scratch import scratch_dir as _scratch_dir  # noqa: E402
-
-
 @query(
     "q_source_csv_roundtrip",
     oracle="""
@@ -217,7 +210,7 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a header, read it back with an explicit schema, aggregate. Proves
     the csv connector preserves values exactly (int/string columns)."""
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    path = _scratch_dir("nation_csv", sf_dir)
+    path = scratch_dir("nation_csv", sf_dir)
     n.write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType(
         [
@@ -253,7 +246,7 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("o_orderkey", "o_orderpriority")
     )
-    path = _scratch_dir("orders_json", sf_dir)
+    path = scratch_dir("orders_json", sf_dir)
     o.write.mode("overwrite").json(path)
     back = spark.read.json(path)
     return back.groupBy("o_orderpriority").agg(F.count("*").alias("n_orders"))
@@ -405,7 +398,7 @@ def q_source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema, aggregate. XML scans are row-tag splittable, so
     the source parallelizes like any file format."""
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    path = _scratch_dir("region_xml", sf_dir)
+    path = scratch_dir("region_xml", sf_dir)
     r.write.mode("overwrite").option("rootTag", "regions").option("rowTag", "region").format(
         "xml"
     ).save(path)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.plans.relational_ext import _scratch_dir
+from simplemapreduce_spark.scratch import scratch_dir, staged_once
 from simplemapreduce_spark.session import scoped_conf
 from simplemapreduce_spark.sources.tables import load_table
 
@@ -213,7 +213,7 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     connector; filters/projections push down into ORC scans the same
     way they do for parquet."""
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    path = _scratch_dir("supplier_orc", sf_dir)
+    path = scratch_dir("supplier_orc", sf_dir)
     s.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("s_nationkey").agg(
@@ -241,7 +241,7 @@ def q_sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderstatus"
     )
-    path = _scratch_dir("orders_part_parquet", sf_dir)
+    path = scratch_dir("orders_part_parquet", sf_dir)
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "O")
     return back.groupBy("o_orderpriority").agg(
@@ -403,9 +403,6 @@ def q_source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesced listing and a packed format (parquet BINARY column, as
     in plans/extensions.py) — this operator covers the raw-landing
     ingest step that produces such packed tables."""
-    from simplemapreduce_spark.cache import table_stamp
-    from simplemapreduce_spark.scratch import staged_once
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Stage the one-file-per-doc landing zone ONCE per source stamp:
     # the 5000-partition-dir write dominated every re-invocation
@@ -414,7 +411,7 @@ def q_source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = staged_once(
         "doc_binfiles",
         sf_dir,
-        table_stamp(sf_dir, "documents"),
+        "documents",
         lambda p: d.write.mode("overwrite").partitionBy("doc_id").text(p),
     )
     # Parallel file discovery sized to the cluster (round 11, guide
@@ -516,7 +513,7 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_regionkey"),
         )
     )
-    path = _scratch_dir("nation_csv_malformed", sf_dir)
+    path = scratch_dir("nation_csv_malformed", sf_dir)
     n.select(line.alias("value")).coalesce(1).write.mode("overwrite").text(path)
     schema = T.StructType(
         [
@@ -574,7 +571,7 @@ def q_source_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataF
     production default is a table-level schema in a catalog.) The
     oracle reconstructs the same union from the generation rule."""
     r = load_table(spark, sf_dir, "region")
-    path = _scratch_dir("region_evolved", sf_dir)
+    path = scratch_dir("region_evolved", sf_dir)
     (
         r.filter(F.col("r_regionkey") < 3)
         .select("r_regionkey", "r_name")

@@ -4,12 +4,32 @@
 sink path (csv/json/orc/xml/text round-trips, the foreachBatch parquet
 sink, the shipped package zip) lands under; session.gc_scratch cleans
 stale runs from it.
+
+The rule for files staged once per source version: stage ONLY through
+``staged_once``. It stamps the staged directory with the source
+table's ``cache.table_stamp`` in a marker file INSIDE that directory,
+so the marker and the files it vouches for are created and removed
+together (gc_scratch cannot delete one and leave the other). The four
+staged artifacts are:
+
+- ``doc_binfiles``: one file per document (q_source_binary_files)
+- ``dpp_lineitem_by_month``: lineitem partitioned by ship month
+  (q_join_dpp)
+- ``minhash_sig``: the parquet MinHash signature checkpoint
+  (q_dedup_minhash_lsh_ckpt)
+- ``stream_late``: the three-batch late-data replay of events
+  (q_stream_late_drop, q_stream_update_mode)
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from typing import Callable
+
+from simplemapreduce_spark.cache import table_stamp
+
+MARKER = "_SMR_STAMP"
 
 
 def scratch_root() -> str:
@@ -21,27 +41,28 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
     return os.path.join(scratch_root(), f"{kind}_{sf_tag}")
 
 
-def staged_once(kind: str, sf_dir: str, stamp: str, writer) -> str:
-    """Materialize a staging directory at most once per source stamp:
-    if the dir already carries a matching ``_SMR_STAMP`` marker, the
-    write is skipped and the existing files are reused; otherwise
-    ``writer(path)`` runs and the marker is written AFTER it completes
-    (a crashed write never masquerades as staged). This is the
-    landing-zone contract: raw-file staging happens once per source
-    version, every downstream read reuses it — re-invoking an
-    ingest query must not redo the one-file-per-row filesystem churn
-    (measured: q_source_binary_files re-wrote 5000 partition dirs per
-    run, 70 s of its 70 s warm time at sf0.1). Spark ignores
+def staged_once(kind: str, sf_dir: str, table: str, writer: Callable[[str], None]) -> str:
+    """Materialize ``scratch_dir(kind, sf_dir)`` at most once per
+    version of the source table ``table``: if the dir already carries
+    a ``_SMR_STAMP`` marker equal to the table's stamp, the write is
+    skipped and the existing files are reused; otherwise any stale
+    marker is removed, ``writer(path)`` runs, and the marker is written
+    AFTER it completes (a crashed write never masquerades as staged).
+    This is the landing-zone contract: raw-file staging happens once
+    per source version, every downstream read reuses it — re-invoking
+    an ingest query must not redo the one-file-per-row filesystem
+    churn (measured: q_source_binary_files re-wrote 5000 partition
+    dirs per run, 70 s of its 70 s warm time at sf0.1). Spark ignores
     underscore-prefixed files when listing, so the marker never
     reaches a reader."""
-    import os
-
     path = scratch_dir(kind, sf_dir)
-    marker = os.path.join(path, "_SMR_STAMP")
+    marker = os.path.join(path, MARKER)
+    stamp = table_stamp(sf_dir, table)
     try:
         with open(marker) as f:
             if f.read() == stamp:
                 return path
+        os.remove(marker)
     except OSError:
         pass
     writer(path)

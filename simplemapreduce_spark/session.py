@@ -1,6 +1,6 @@
-"""SparkSession factory tuned for the local[32] test harness while
-remaining cluster-safe (every setting here is sane on a 1000-executor
-cluster; only master/memory are local-mode specifics).
+"""SparkSession factory for local mode, sized to the host it runs on,
+while remaining cluster-safe (every setting here is sane on a
+1000-executor cluster; only master/memory are local-mode specifics).
 
 Reference lifecycle being replaced: Sequential/Distributed masters
 (/root/reference/src/mapreduce/master_sequential.go:6-28,
@@ -17,10 +17,18 @@ from typing import Iterator
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitions: match local parallelism rather than the default
-# 200 (tiny local data) — on a real cluster AQE coalesces to the right
-# number anyway, so this is a floor, not a ceiling.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local parallelism defaults to the CPUs this process may run on and
+# the driver heap to half of physical memory; SPARK_GRAFT_CPUS and
+# SPARK_GRAFT_DRIVER_MEM override them per deployment. Shuffle
+# partitions match local parallelism rather than the default 200 (tiny
+# local data) — on a real cluster AQE coalesces to the right number
+# anyway, so this is a floor, not a ceiling.
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _default_driver_mem() -> str:
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{half_mb}m"
 
 
 def get_spark(app_name: str = "simplemapreduce_spark", *, cpus: str | None = None) -> SparkSession:
@@ -42,7 +50,7 @@ def get_spark(app_name: str = "simplemapreduce_spark", *, cpus: str | None = Non
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

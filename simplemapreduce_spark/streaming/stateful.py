@@ -16,18 +16,27 @@ loops, no collect.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.session import scoped_conf
-from simplemapreduce_spark.streaming.windows import (
-    run_stream_to_table,
-    stream_events,
-    stream_state_partitions,
-)
+from simplemapreduce_spark.streaming.windows import run_stream_to_table, stream_events
+
+
+def _last_emission_per_user(out: DataFrame) -> DataFrame:
+    """The final (cumulative) emission per user of a running-totals
+    stream: the row with the largest ``n_events``. Over a finite
+    replay it equals the batch aggregate."""
+    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        out.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "n_events", "total_value_cents")
+    )
+
 
 _COUNT_OUT = T.StructType(
     [
@@ -87,16 +96,7 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             update, _COUNT_OUT, _COUNT_STATE, "append", GroupStateTimeout.NoTimeout
         )
     )
-    out = run_stream_to_table(updates, "append", state_partitions=stream_state_partitions(spark, sf_dir))
-    # Keep the final (cumulative) emission per user: the one with max n.
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "total_value_cents")
-    )
+    return _last_emission_per_user(run_stream_to_table(updates, "append", sf_dir))
 
 
 _TWS_OUT = T.StructType(
@@ -181,15 +181,8 @@ def tws_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     ):
-        out = run_stream_to_table(updates, "append", state_partitions=stream_state_partitions(spark, sf_dir))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "total_value_cents")
-    )
+        out = run_stream_to_table(updates, "append", sf_dir)
+    return _last_emission_per_user(out)
 
 
 _SESS_OUT = T.StructType(
@@ -274,7 +267,7 @@ def q_stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_shipped(spark)
     sess = sessionize_stateful_stream(stream_events(spark, sf_dir))
-    out = run_stream_to_table(sess, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(sess, "append", sf_dir)
     return out.select(
         "user_id",
         micros_to_ntz(F.col("start_us")).alias("session_start"),

@@ -13,6 +13,15 @@ output mode the final table equals the batch answer, so these entries
 are fully DuckDB-oracle-checkable — the strongest check available for
 a streaming plan.
 
+The drain rule: ``_drain`` is the only code that runs a stream to
+completion (unique query name, availableNow trigger, a 300 s wait that
+raises on timeout, stop in ``finally``). Memory-sink queries reach it
+through ``run_stream_to_table``, which also sizes the stream's state
+partitions from the source (``stream_state_partitions``); the
+foreachBatch sink passes its own writer. The one exception is
+``q_source_python_stream``: Python streaming sources cannot use
+availableNow, so it polls its committed aggregate instead.
+
 Scale design: watermark + windowed agg is incremental state (one row
 per open window per key in the state store), not a re-scan; the same
 plan runs unchanged against a Kafka/file stream on a cluster with
@@ -27,6 +36,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import event_time_to_ntz, ntz_as_event_time
@@ -128,11 +138,11 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     return max(2, min(int(target), spark.sparkContext.defaultParallelism))
 
 
-def run_stream_to_table(
-    df: DataFrame, output_mode: str, state_partitions: int | None = None
-) -> DataFrame:
-    """Execute a (finite) streaming DataFrame to completion into a
-    memory sink; return the materialized result as a batch DataFrame.
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int | None = None
+) -> str:
+    """Run the configured ``writer`` to completion under a fresh query
+    name with an availableNow trigger; return the query name.
 
     ``state_partitions`` (see :func:`stream_state_partitions`) sets the
     stream's shuffle/state partition count for THIS query only: the
@@ -145,25 +155,32 @@ def run_stream_to_table(
     ``session.scoped_conf``, whose process-wide lock keeps drains
     started from different driver threads from leaking the wrong
     count into the session."""
-    spark = df.sparkSession
     name = f"smr_stream_{int(time.monotonic_ns())}"
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
     with scoped_conf(spark, "spark.sql.shuffle.partitions", state_partitions):
-        q = writer.start()
+        q = writer.queryName(name).trigger(availableNow=True).start()
     try:
         # availableNow terminates once drained; a False return means the
-        # drain timed out and the table is PARTIAL — fail loudly rather
+        # drain timed out and the sink is PARTIAL — fail loudly rather
         # than hand a silently-wrong result to the oracle compare.
         # RuntimeError, not assert: asserts vanish under `python -O`.
         if not q.awaitTermination(300):
             raise RuntimeError("stream drain timed out after 300s")
     finally:
         q.stop()
+    return name
+
+
+def run_stream_to_table(df: DataFrame, output_mode: str, sf_dir: str) -> DataFrame:
+    """Execute a (finite) streaming DataFrame over the ``sf_dir``
+    fixtures to completion into a memory sink, with its state
+    partitions sized to the source; return the materialized result as
+    a batch DataFrame."""
+    spark = df.sparkSession
+    name = _drain(
+        spark,
+        df.writeStream.format("memory").outputMode(output_mode),
+        stream_state_partitions(spark, sf_dir),
+    )
     return spark.table(name)
 
 
@@ -188,7 +205,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
     )
-    out = run_stream_to_table(agg, "complete", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(agg, "complete", sf_dir)
     return out.select(
         event_time_to_ntz(F.col("w.start")).alias("window_start"), "event_type", "n", "sum_value"
     )
@@ -220,7 +237,7 @@ def q_stream_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("user_id", 0.01).alias("approx_users"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    out = run_stream_to_table(agg, "complete", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(agg, "complete", sf_dir)
     from simplemapreduce_spark.sources.tables import load_table
 
     exact = load_table(spark, sf_dir, "events").agg(
@@ -289,7 +306,7 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ten.groupBy(F.window(F.col("w"), "1 hour").alias("h"), "event_type").agg(
         F.max("n").alias("max_10min_n"), F.sum("n").alias("hour_n")
     )
-    out = run_stream_to_table(hourly, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(hourly, "append", sf_dir)
     return out.select(
         "event_type",
         event_time_to_ntz(F.col("h.start")).alias("hour_start"),
@@ -319,7 +336,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    out = run_stream_to_table(agg, "complete", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(agg, "complete", sf_dir)
     return out.select(event_time_to_ntz(F.col("w.start")).alias("window_start"), "n")
 
 
@@ -358,7 +375,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    out = run_stream_to_table(agg, "complete", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(agg, "complete", sf_dir)
     return out.select(
         "user_id",
         event_time_to_ntz(F.col("w.start")).alias("session_start"),
@@ -399,7 +416,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("type_rank", "event_type")
         .agg(F.count("*").alias("n"))
     )
-    return run_stream_to_table(agg, "complete", state_partitions=stream_state_partitions(spark, sf_dir))
+    return run_stream_to_table(agg, "complete", sf_dir)
 
 
 def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
@@ -438,7 +455,7 @@ def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFram
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         how,
     )
-    return run_stream_to_table(joined, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    return run_stream_to_table(joined, "append", sf_dir)
 
 
 @query(
@@ -550,7 +567,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    out = run_stream_to_table(deduped, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(deduped, "append", sf_dir)
     return out.groupBy("event_type").agg(
         F.count("user_id").alias("n_distinct_users")
     )
@@ -575,7 +592,6 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent under retries at production scale; append mode keeps the
     local check honest (a duplicated batch would fail the count)."""
     import shutil
-    import time as _time
 
     from simplemapreduce_spark.scratch import scratch_dir
 
@@ -585,20 +601,10 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select("event_id", "event_type", "value").write.mode("append").parquet(out)
 
-    name = f"smr_stream_{int(_time.monotonic_ns())}"
-    q = (
-        stream_events(spark, sf_dir)
-        .writeStream.foreachBatch(write_batch)
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        stream_events(spark, sf_dir).writeStream.foreachBatch(write_batch).outputMode("append"),
     )
-    try:
-        if not q.awaitTermination(300):
-            raise RuntimeError("stream drain timed out after 300s")
-    finally:
-        q.stop()
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -626,40 +632,56 @@ def _stage_late_batches(spark: SparkSession, sf_dir: str) -> str:
     empty file advances the batch counter without touching data, so
     the odd batch is filtered against max(even ts) - delay exactly.
 
-    Re-stages automatically when the fixture changes (the marker
-    records the source file's identity)."""
+    Staged through scratch.staged_once, so it re-stages automatically
+    when the events fixture changes."""
     import glob
     import shutil
 
-    from simplemapreduce_spark.scratch import scratch_dir
-    from simplemapreduce_spark.sources.tables import load_table, table_path
+    from simplemapreduce_spark.scratch import staged_once
+    from simplemapreduce_spark.sources.tables import load_table
 
-    out = scratch_dir("stream_late", sf_dir)
-    src = table_path(sf_dir, "events")
-    stamp = f"v3:{os.path.getmtime(src)}:{os.path.getsize(src)}"
-    marker = os.path.join(out, "_staged")
-    if os.path.exists(marker) and open(marker).read() == stamp:
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    e = load_table(spark, sf_dir, "events")
-    halves = {
-        1: e.filter(F.col("event_id") % 2 == 0),
-        2: e.filter(F.lit(False)),
-        3: e.filter(F.col("event_id") % 2 == 1),
-    }
-    os.makedirs(out, exist_ok=True)
-    now = time.time()
-    for i, df in halves.items():
-        tmp = f"{out}_b{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(tmp + "/part-*.parquet")[0]
-        dst = os.path.join(out, f"batch{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (now - 1000 * (3 - i), now - 1000 * (3 - i)))
-        shutil.rmtree(tmp)
-    with open(marker, "w") as fh:
-        fh.write(stamp)
-    return out
+    def write_batches(out: str) -> None:
+        shutil.rmtree(out, ignore_errors=True)
+        e = load_table(spark, sf_dir, "events")
+        halves = {
+            1: e.filter(F.col("event_id") % 2 == 0),
+            2: e.filter(F.lit(False)),
+            3: e.filter(F.col("event_id") % 2 == 1),
+        }
+        os.makedirs(out, exist_ok=True)
+        now = time.time()
+        for i, df in halves.items():
+            tmp = f"{out}_b{i}"
+            df.coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = glob.glob(tmp + "/part-*.parquet")[0]
+            dst = os.path.join(out, f"batch{i}.parquet")
+            shutil.copy(part, dst)
+            os.utime(dst, (now - 1000 * (3 - i), now - 1000 * (3 - i)))
+            shutil.rmtree(tmp)
+
+    return staged_once("stream_late", sf_dir, "events", write_batches)
+
+
+def _late_replay_counts(spark: SparkSession, sf_dir: str, output_mode: str) -> DataFrame:
+    """The three-batch late-data replay (:func:`_stage_late_batches`)
+    under a ~10-minute watermark, counted per (hour window, event
+    type) and drained in ``output_mode``. Shared by
+    q_stream_late_drop (append) and q_stream_update_mode (update)."""
+    raw = (
+        spark.readStream.schema(EVENTS_RAW_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(_stage_late_batches(spark, sf_dir))
+    )
+    agg = (
+        raw.withColumn("ts", ntz_as_event_time("ts"))
+        .withWatermark("ts", f"{_LATE_DELAY_MS} milliseconds")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"))
+    )
+    out = run_stream_to_table(agg, output_mode, sf_dir)
+    return out.select(
+        event_time_to_ntz(F.col("w.start")).alias("window_start"), "event_type", "n"
+    )
 
 
 @query(
@@ -696,22 +718,7 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleared the final watermark. Verified value-exact at sf0.001 and
     sf0.01; the strict/inclusive boundary choice is unobservable on
     microsecond-granular fixtures (window ends are hour-aligned)."""
-    staged = _stage_late_batches(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(EVENTS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    agg = (
-        raw.withColumn("ts", ntz_as_event_time("ts"))
-        .withWatermark("ts", f"{_LATE_DELAY_MS} milliseconds")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-    out = run_stream_to_table(agg, "append", state_partitions=stream_state_partitions(spark, sf_dir))
-    return out.select(
-        event_time_to_ntz(F.col("w.start")).alias("window_start"), "event_type", "n"
-    )
+    return _late_replay_counts(spark, sf_dir, "append")
 
 
 @query(
@@ -754,22 +761,7 @@ def q_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and late-dropped odds update nothing. That whole multiset is a
     deterministic function of the fixture, mirrored row-for-row
     (including the duplicates) in the oracle."""
-    staged = _stage_late_batches(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(EVENTS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    agg = (
-        raw.withColumn("ts", ntz_as_event_time("ts"))
-        .withWatermark("ts", f"{_LATE_DELAY_MS} milliseconds")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-    out = run_stream_to_table(agg, "update", state_partitions=stream_state_partitions(spark, sf_dir))
-    return out.select(
-        event_time_to_ntz(F.col("w.start")).alias("window_start"), "event_type", "n"
-    )
+    return _late_replay_counts(spark, sf_dir, "update")
 
 
 @query(
@@ -797,7 +789,7 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    out = run_stream_to_table(deduped, "append", state_partitions=stream_state_partitions(spark, sf_dir))
+    out = run_stream_to_table(deduped, "append", sf_dir)
     return out.groupBy("event_type").agg(
         F.count("user_id").alias("n_distinct_users")
     )

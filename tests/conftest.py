@@ -22,7 +22,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    # Fewer threads than production local[32]: test queries are tiny and
+    # A fixed thread count whatever the host: test queries are tiny and
     # session startup dominates; correctness is independent of N.
     s = get_spark("smr-tests", cpus="8")
     yield s
@@ -49,11 +49,10 @@ def scratch_fully_collectable():
     down last, i.e. after the Spark session has stopped releasing any
     files it held."""
     yield
-    import tempfile
-
+    from simplemapreduce_spark.scratch import scratch_root
     from simplemapreduce_spark.session import gc_scratch
 
     gc_scratch(max_age_hours=-0.01)
-    scratch = os.path.join(tempfile.gettempdir(), "smr_scratch")
+    scratch = scratch_root()
     leftover = os.listdir(scratch) if os.path.isdir(scratch) else []
     assert not leftover, f"smr_scratch entries gc_scratch could not remove: {leftover}"

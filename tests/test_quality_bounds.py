@@ -11,11 +11,11 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark import catalog
+from simplemapreduce_spark.scratch import scratch_root
 from simplemapreduce_spark.sinks import write_key_value_text
 from simplemapreduce_spark.sources.tables import load_table
 
@@ -98,7 +98,7 @@ def test_key_value_sink_golden_bytes(spark):
     df = spark.createDataFrame(
         [("2", "two"), ("10", "ten"), ("1", "one")], ["key", "value"]
     )
-    path = os.path.join(tempfile.gettempdir(), "smr_scratch", "kv_golden")
+    path = os.path.join(scratch_root(), "kv_golden")
     write_key_value_text(df, path)
     [part] = glob.glob(os.path.join(path, "part-*"))
     with open(part, "rb") as f:

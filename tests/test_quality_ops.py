@@ -8,13 +8,14 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark import catalog
 from simplemapreduce_spark.plans.quality import TARGET_ROWS_PER_FILE
-from simplemapreduce_spark.scratch import scratch_dir
+from simplemapreduce_spark.scratch import MARKER, scratch_dir
 from simplemapreduce_spark.sources.tables import load_table
 
 catalog.load_all()
@@ -86,18 +87,19 @@ def test_snapshot_diff_all_classes(spark, sf_dir):
 
 
 def test_minhash_ckpt_stamp_invalidation(spark, sf_dir):
-    """The parquet-checkpointed signature table rebuilds when its
-    source-fixture stamp goes stale, and the rebuilt results equal the
-    cache-backed variant's."""
-    path = scratch_dir("minhash_sig", sf_dir)
-    stamp_file = path + ".stamp"
+    """The parquet-checkpointed signature table rebuilds when the stamp
+    marker inside its staged directory goes stale, and the rebuilt
+    results equal the cache-backed variant's."""
+    marker = os.path.join(scratch_dir("minhash_sig", sf_dir), MARKER)
     ckpt = catalog.QUERIES["q_dedup_minhash_lsh_ckpt"]
     ckpt(spark, sf_dir).count()
-    real_stamp = open(stamp_file).read()
-    with open(stamp_file, "w") as f:
+    with open(marker) as f:
+        real_stamp = f.read()
+    with open(marker, "w") as f:
         f.write("stale")
     rows_ckpt = sorted(map(tuple, ckpt(spark, sf_dir).collect()))
-    assert open(stamp_file).read() == real_stamp, "stale checkpoint not rebuilt"
+    with open(marker) as f:
+        assert f.read() == real_stamp, "stale checkpoint not rebuilt"
     rows_cache = sorted(
         map(tuple, catalog.QUERIES["q_dedup_minhash_lsh"](spark, sf_dir).collect())
     )

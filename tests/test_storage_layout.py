@@ -9,11 +9,11 @@ must be visible in the physical plan, not just hoped for.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from simplemapreduce_spark.scratch import scratch_root
 from simplemapreduce_spark.sources.tables import load_table
 
 
@@ -25,7 +25,7 @@ def _plan(df) -> str:
 
 @pytest.fixture(scope="module")
 def partitioned_docs(spark, sf_dir):
-    out = os.path.join(tempfile.gettempdir(), "smr_scratch", "docs_by_lang")
+    out = os.path.join(scratch_root(), "docs_by_lang")
     load_table(spark, sf_dir, "documents").write.mode("overwrite").partitionBy("lang").parquet(out)
     return out
 
@@ -45,7 +45,7 @@ def test_partition_pruning(spark, sf_dir, partitioned_docs):
 def bucketed_tables(spark, sf_dir):
     # Explicit paths make these EXTERNAL tables, so the (static)
     # warehouse dir is irrelevant; only derby metadata lands in cwd.
-    warehouse = os.path.join(tempfile.gettempdir(), "smr_scratch", "warehouse")
+    warehouse = os.path.join(scratch_root(), "warehouse")
     for name, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
         tbl = f"b_{name}"
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -127,9 +127,7 @@ def test_gc_scratch_removes_stale_keeps_fresh(tmp_path):
 
     from simplemapreduce_spark.session import gc_scratch
 
-    import tempfile
-
-    scratch = os.path.join(tempfile.gettempdir(), "smr_scratch")
+    scratch = scratch_root()
     os.makedirs(scratch, exist_ok=True)
     stale = os.path.join(scratch, "unit_stale_dir")
     fresh = os.path.join(scratch, "unit_fresh_dir")

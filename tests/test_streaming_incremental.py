@@ -7,12 +7,12 @@ answer — i.e. state really carries across batches, not just within one.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from simplemapreduce_spark.scratch import scratch_root
 from simplemapreduce_spark.sources.tables import load_table
 
 N_FILES = 4
@@ -20,7 +20,7 @@ N_FILES = 4
 
 @pytest.fixture(scope="module")
 def multi_file_events(spark, sf_dir):
-    out = os.path.join(tempfile.gettempdir(), "smr_scratch", "events_multifile")
+    out = os.path.join(scratch_root(), "events_multifile")
     (
         load_table(spark, sf_dir, "events")
         .repartition(N_FILES)
@@ -60,7 +60,7 @@ def test_stateful_counts_across_microbatches(spark, sf_dir, multi_file_events):
     updates = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    out = run_stream_to_table(updates, "append")
+    out = run_stream_to_table(updates, "append", sf_dir)
 
     # More than one emission per user proves multiple micro-batches ran.
     emissions = out.groupBy("user_id").count()
@@ -95,7 +95,7 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir, multi_file_events):
     # Convert the LTZ window bound back to NTZ (what the production
     # queries do) so the comparison against the NTZ batch side is
     # OS-timezone independent.
-    got = run_stream_to_table(agg, "complete").select(
+    got = run_stream_to_table(agg, "complete", sf_dir).select(
         event_time_to_ntz(F.col("w.start")).alias("ws"), "event_type", "n"
     )
     want = (
@@ -245,7 +245,7 @@ def test_sessionize_checkpoint_kill_and_resume(spark, sf_dir, tmp_path):
     # ACROSS batches — the state the kill must not lose. The round-
     # robin multi_file_events fixture would instead put the global max
     # ts in batch 1 and watermark-drop nearly everything after.
-    ranged = os.path.join(tempfile.gettempdir(), "smr_scratch", "events_timeranged")
+    ranged = os.path.join(scratch_root(), "events_timeranged")
     ev.repartitionByRange(N_FILES, "ts").sortWithinPartitions("ts").write.mode(
         "overwrite"
     ).parquet(ranged)
