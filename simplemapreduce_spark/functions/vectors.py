@@ -2,8 +2,12 @@
 pair expansion of an array column.
 
 All JVM-side higher-order functions (``aggregate`` / ``zip_with`` /
-``transform``) — no Python in the hot path, so cosine scoring stays
-inside whole-stage codegen and scales linearly with executor count.
+``transform``) — no Python in the hot path, so cosine scoring scales
+linearly with executor count. The lambdas are interpreted, not
+whole-stage codegen'd: these functions are ``CodegenFallback``
+expressions, so ``explain("codegen")`` of a ``cosine_similarity``
+projection shows the ``Project`` outside every codegen subtree (no
+``*(n)`` marker).
 """
 
 from __future__ import annotations

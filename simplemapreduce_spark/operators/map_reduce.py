@@ -13,20 +13,28 @@ over untyped string pairs — on Spark:
   not observable in outputs (SURVEY.md §2.1 row 3).
 * group values per key + holistic ``reduceF(key, values) -> value``
   (common_reduce.go:51-87, called once per distinct key with ALL
-  values). Here: ``applyInPandas`` over ``groupBy("key")`` — the same
-  all-values-in-memory contract. NOTE the deliberate divergence knob:
-  native Spark aggregates spill / combine partially; this compat
-  operator intentionally does not, matching the reference
-  (SURVEY.md §7.3).
+  values). Here: ``groupBy("key").agg(collect_list("value"))`` and one
+  Arrow-batched ``mapInPandas`` that calls ``reduce_f`` once per
+  grouped row — one key's values are one row's array, the same
+  all-values-in-memory contract. ``collect_list`` drops nulls, so the
+  number of null values per key is aggregated beside it and that many
+  ``None`` are appended: ``reduce_f`` sees the key's whole multiset.
+  NOTE the deliberate divergence knob: native Spark aggregates spill /
+  combine partially; this compat operator intentionally does not,
+  matching the reference (SURVEY.md §7.3).
 * global lexicographic sort of string keys
-  (/root/reference/src/mapreduce/master.go:112-116). Here:
-  ``orderBy("key")`` — a range-partitioned external sort.
+  (mapreduce/master.go:112-116). Here: the grouped
+  rows are range-partitioned and sorted within partitions by key
+  *before* the Python reduce, so Spark's range-partition sampling job
+  reads JVM rows and ``reduce_f`` runs once per key, not a second time
+  for the sample.
 
-At scale: mapInPandas/applyInPandas stream Arrow batches, so the map
-side never materializes a partition in Python memory; the reduce side
-holds one key-group at a time (reference contract). For aggregates
-expressible with built-ins, callers should bypass this API — it exists
-for parity, not as the fast path.
+At scale: mapInPandas streams Arrow batches, so the map side never
+materializes a partition in Python memory; the reduce side holds one
+Arrow batch of grouped keys at a time, each key with all of its values
+(reference contract). For aggregates expressible with built-ins,
+callers should bypass this API — it exists for parity, not as the fast
+path.
 """
 
 from __future__ import annotations
@@ -76,21 +84,40 @@ def map_pairs(df: DataFrame, map_f: MapF) -> DataFrame:
     return df.mapInPandas(run, schema=KV_SCHEMA)
 
 
+def _group_values(pairs: DataFrame, n_partitions: int | None) -> DataFrame:
+    """One row per distinct key: the key's non-null values as an array
+    and the number of its null values."""
+    if n_partitions is not None:
+        pairs = pairs.repartition(n_partitions, "key")
+    return pairs.groupBy("key").agg(
+        F.collect_list("value").alias("values"),
+        F.count_if(F.col("value").isNull()).alias("nulls"),
+    )
+
+
+def _reduce_groups(grouped: DataFrame, reduce_f: ReduceF) -> DataFrame:
+    """Call ``reduce_f(key, values)`` once per grouped row, keeping
+    partition and row order."""
+    from simplemapreduce_spark.session import ensure_package_shipped
+
+    ensure_package_shipped(grouped.sparkSession)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            values = [
+                reduce_f(key, vals.tolist() + [None] * nulls)
+                for key, vals, nulls in zip(batch["key"], batch["values"], batch["nulls"])
+            ]
+            yield pd.DataFrame({"key": batch["key"], "value": values})
+
+    return grouped.mapInPandas(run, schema=KV_SCHEMA)
+
+
 def reduce_pairs(pairs: DataFrame, reduce_f: ReduceF, n_partitions: int | None = None) -> DataFrame:
     """Group all values per key and apply the holistic reduce once per
     distinct key. ``n_partitions`` mirrors the reference's nReduce —
     omit to let AQE choose."""
-    from simplemapreduce_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(pairs.sparkSession)
-    if n_partitions is not None:
-        pairs = pairs.repartition(n_partitions, "key")
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        return pd.DataFrame({"key": [key], "value": [reduce_f(key, pdf["value"].tolist())]})
-
-    return pairs.groupBy("key").applyInPandas(run, schema=KV_SCHEMA)
+    return _reduce_groups(_group_values(pairs, n_partitions), reduce_f)
 
 
 def map_reduce(
@@ -106,8 +133,19 @@ def map_reduce(
     Output invariants matching the reference:
     * exactly one row per distinct key (common_reduce.go:84-86);
     * ``sort=True`` orders by the STRING key — ``"10" < "2"``
-      (master.go:116, sort.Strings semantics).
+      (master.go:116, sort.Strings semantics). The grouped rows are
+      range-partitioned (into ``n_partitions`` when given) and sorted
+      within partitions before the reduce, whose ``mapInPandas`` keeps
+      partition and row order, so ``collect()`` and partition-ordered
+      writes come back sorted. Catalyst does not know the output is
+      ordered: an operator that needs a key order (``orderBy``, a
+      sort-merge join) still plans its own sort.
     """
-    out = reduce_pairs(map_pairs(df, map_f), reduce_f, n_partitions)
-    return out.orderBy(F.col("key").asc()) if sort else out
-
+    grouped = _group_values(map_pairs(df, map_f), n_partitions)
+    if sort:
+        if n_partitions is not None:
+            grouped = grouped.repartitionByRange(n_partitions, "key")
+        else:
+            grouped = grouped.repartitionByRange("key")
+        grouped = grouped.sortWithinPartitions("key")
+    return _reduce_groups(grouped, reduce_f)

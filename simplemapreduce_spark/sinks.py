@@ -7,9 +7,12 @@ key-sorted ``"<key>: <value>"`` lines
 
 Scale note: a single output file forces a 1-partition final stage, as
 does the reference's single-process merge. That is inherent to the
-artifact, not a Spark limitation — pass ``single_file=False`` to keep
-the sort distributed across range-partitioned part files whose
-concatenation in filename order is globally sorted.
+artifact, not a Spark limitation. The single-file sink therefore sorts
+inside its one partition and runs no range-partition sampling job (a
+global sort would sample, and so re-run, its whole input first). Pass
+``single_file=False`` to keep the sort distributed across
+range-partitioned part files whose concatenation in filename order is
+globally sorted.
 """
 
 from __future__ import annotations
@@ -31,10 +34,11 @@ def write_key_value_text(
     single_file: bool = True,
 ) -> None:
     """Sorted ``key: value`` text sink (the reference's merge())."""
-    out = format_key_value(df.orderBy(F.col(key).asc()), key, value)
     if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
+        df = df.repartition(1).sortWithinPartitions(F.col(key).asc())
+    else:
+        df = df.orderBy(F.col(key).asc())
+    format_key_value(df, key, value).write.mode("overwrite").text(path)
 
 
 def write_json_pairs(df: DataFrame, path: str) -> None:

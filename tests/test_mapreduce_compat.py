@@ -13,12 +13,13 @@ mirroring the reference's own test suite (SURVEY.md §5):
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
 
 from simplemapreduce_spark.operators.map_reduce import map_reduce
-from simplemapreduce_spark.sinks import format_key_value
+from simplemapreduce_spark.sinks import format_key_value, write_key_value_text
 
 N_NUMBER = 100
 
@@ -141,3 +142,78 @@ def test_flagship_final_artifact_bytes(spark, sf_dir, tmp_path):
     with open(parts[0], "rb") as f:
         got = f.read()
     assert got == expected
+
+
+def _counting_word_count(spark):
+    """Word-count mapF/reduceF that count their calls in accumulators
+    (a module global would not reach the Python workers)."""
+    map_calls, reduce_calls = spark.sparkContext.accumulator(0), spark.sparkContext.accumulator(0)
+
+    def map_f(row):
+        map_calls.add(1)
+        for tok in row["value"].split():
+            yield tok, "1"
+
+    def reduce_f(key, values):
+        reduce_calls.add(1)
+        return str(len(values))
+
+    return map_f, reduce_f, map_calls, reduce_calls
+
+
+@pytest.mark.parametrize("n_partitions", [None, 3])
+def test_reduce_f_runs_once_per_key(spark, tmp_path, n_partitions):
+    """reduceF is called once per distinct key (common_reduce.go:56,85)
+    and mapF once per line, through collect() and through the sorted
+    single-file sink: no range-partition sampling job may re-run the
+    Python reduce."""
+    lines = [" ".join(f"w{(i * 7 + j) % 50}" for j in range(5)) for i in range(40)]
+    df = spark.createDataFrame([(line,) for line in lines], ["value"])
+    n_keys = len({tok for line in lines for tok in line.split()})
+
+    map_f, reduce_f, map_calls, reduce_calls = _counting_word_count(spark)
+    rows = map_reduce(df, map_f, reduce_f, n_partitions=n_partitions).collect()
+    assert [r["key"] for r in rows] == sorted(r["key"] for r in rows)
+    assert (map_calls.value, reduce_calls.value) == (len(lines), n_keys)
+
+    map_f, reduce_f, map_calls, reduce_calls = _counting_word_count(spark)
+    out = str(tmp_path / "wc")
+    write_key_value_text(map_reduce(df, map_f, reduce_f, n_partitions=n_partitions), out)
+    assert (map_calls.value, reduce_calls.value) == (len(lines), n_keys)
+    [part] = glob.glob(os.path.join(out, "part-*"))
+    with open(part, "rb") as f:
+        assert f.read() == "".join(f"{r['key']}: {r['value']}\n" for r in rows).encode()
+
+
+def test_null_values_reach_reduce(spark):
+    """collect_list drops nulls; reduceF must still see every value of
+    its key, nulls included."""
+    df = spark.createDataFrame([("x",)], ["value"])
+
+    def map_f(row):
+        yield "a", None
+        yield "a", "x"
+        yield "b", None
+
+    def reduce_f(key, values):
+        return repr(sorted(values, key=lambda v: (v is None, v)))
+
+    got = [tuple(r) for r in map_reduce(df, map_f, reduce_f).collect()]
+    assert got == [("a", "['x', None]"), ("b", "[None]")]
+
+
+def test_empty_input_writes_one_empty_file(spark, tmp_path):
+    df = spark.createDataFrame([], "value string")
+    out = str(tmp_path / "empty")
+    write_key_value_text(map_reduce(df, _map_tokens, _reduce_identity), out)
+    [part] = glob.glob(os.path.join(out, "part-*"))
+    assert os.path.getsize(part) == 0
+
+
+def test_plan_has_no_per_key_pandas_groups(spark, number_df):
+    """The holistic reduce is one grouped row per key fed to one
+    mapInPandas, not one pandas frame per key."""
+    out = map_reduce(number_df, _map_tokens, _reduce_identity, n_partitions=3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInPandas" in plan
