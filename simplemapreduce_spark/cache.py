@@ -37,17 +37,23 @@ _MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def table_stamp(sf_dir: str, name: str) -> str:
-    """Identity stamp of a source parquet file (mtime+size) — fixtures
-    regenerate in place between driver rounds, so a memo entry must die
-    with the file it was computed from (same guard as the streaming
-    late-batch staging)."""
-    from simplemapreduce_spark.sources.tables import table_path
+    """Identity stamp of a source parquet table — fixtures can be
+    regenerated in place, so a memo entry must die with the file it
+    was computed from (same guard as the streaming late-batch
+    staging). A single file stamps as ``mtime_ns:size``. A directory's
+    own stat does not change when a part file is rewritten in place,
+    so a directory stamps from its files: count, max ``mtime_ns`` and
+    total bytes."""
+    from simplemapreduce_spark.sources.tables import file_stats, table_path
 
-    try:
-        st = os.stat(table_path(sf_dir, name))
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
+    path = table_path(sf_dir, name)
+    stats = file_stats(path)
+    if not stats:
         return "nostat"
+    if not os.path.isdir(path):
+        return f"{stats[0].st_mtime_ns}:{stats[0].st_size}"
+    mtime = max(st.st_mtime_ns for st in stats)
+    return f"dir:{len(stats)}:{mtime}:{sum(st.st_size for st in stats)}"
 
 
 def _memo_store(

@@ -39,9 +39,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # The grading driver verifies the FIRST ~50 registered queries.
-# GENERATED by tools/rotate_driver_window.py --write; do not edit
-# by hand. Window composed after round 10 (364/364 driver-checked): 37 judge-prescribed re-check, 13 freshness.
-# Full manifest + per-query verdict history: DRIVER_COVERAGE.md.
+# Plain data, composed after round 10 and pinned by
+# tests/test_entry_contract.py.
 DRIVER_PRIORITY: tuple[str, ...] = (
     # -- judge-prescribed re-check (VERDICT r10 #1: post-rewrite ground truth) --
     "q_stream_tumbling",

@@ -70,12 +70,9 @@ def with_global_order(
 
     ``order_col`` must be numeric and non-null. Results are EXACT —
     ties share a bucket, within-bucket windows order by the full key,
-    and offsets add the earlier buckets' totals.
-
-    The ``running_sums`` and ``total_sums`` source columns must be
-    non-null too: a bucket whose within-bucket prefix is all NULL
-    yields NULL where the single-partition window would yield the
-    earlier buckets' total.
+    and offsets add the earlier buckets' totals. NULL sources are
+    skipped as ``sum`` skips them: a running sum is NULL only while
+    the whole prefix so far is NULL.
 
     Buckets are assigned on ``order_col`` cast to double. For int64 or
     decimal order values that differ only beyond 2^53, rows collapse
@@ -121,8 +118,11 @@ def with_global_order(
     wfull = W.partitionBy(*gcols).orderBy("_bkt").rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing
     )
+    # Left NULL when every earlier bucket's sum is NULL (or there is
+    # none), so the projection below can tell "no earlier total" apart
+    # from a total of 0.
     off_cols = [
-        F.coalesce(F.sum(sum_srcs[src]).over(woff), F.lit(0)).alias(f"_off_{out}")
+        F.sum(sum_srcs[src]).over(woff).alias(f"_off_{out}")
         for src, out in running_sums
     ]
     if row_number_col is not None:
@@ -140,7 +140,10 @@ def with_global_order(
     out = b.join(F.broadcast(offsets), [*gcols, "_bkt"])
     proj = [F.col(c) for c in df.columns]
     for src, name in running_sums:
-        proj.append((F.sum(src).over(run) + F.col(f"_off_{name}")).alias(name))
+        # NULL only when the whole global prefix is NULL, as in the
+        # single-partition window.
+        s_in, off = F.sum(src).over(run), F.col(f"_off_{name}")
+        proj.append(F.coalesce(s_in + off, s_in, off).alias(name))
     if row_number_col is not None:
         proj.append(
             (F.row_number().over(wb) + F.col("_off_rn")).alias(row_number_col)

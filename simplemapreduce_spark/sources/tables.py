@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
+
+from simplemapreduce_spark.cache import table_stamp
 
 TABLE_NAMES = (
     "region",
@@ -39,9 +42,31 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (absolute path, inference conf values) -> (file stamp, inferred schema).
+_SCHEMAS: dict[tuple[str, tuple], tuple[str, StructType]] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table. Declarative scan — filters/projections
     applied by callers reach the parquet reader via Catalyst pushdown.
+
+    Inferring a parquet schema runs a Spark job, so each table's schema
+    is inferred once per file version and then read with
+    ``spark.read.schema``. The cache is keyed by the absolute path and
+    the session values of ``_INFERENCE_CONFS``; an entry holds for one
+    ``cache.table_stamp`` of the file, so a table rewritten in place is
+    inferred again. Every call still returns a fresh DataFrame, so two
+    loads of one table self-join with distinct attribute ids. Threads
+    that race on a miss each infer the same schema; no lock is needed.
 
     ``events.ts`` is plain timestamp[us] parquet (no tz flag) — read
     as TIMESTAMP_NTZ, exactly the naive TIMESTAMP DuckDB sees, so
@@ -62,12 +87,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    path = os.path.abspath(table_path(sf_dir, name))
+    key = (path, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    # Stamp before inferring: a rewrite in between leaves a stale stamp
+    # on the entry, which the next call misses.
+    stamp = table_stamp(sf_dir, name)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        schema = hit[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        _SCHEMAS[key] = (stamp, schema)
+    if name == "events" and "ts" in schema.names and schema["ts"].dataType == LongType():
         from simplemapreduce_spark.functions.time import micros_to_ntz
 
         df = df.withColumn("ts", micros_to_ntz(F.expr("ts div 1000")))
     return df
+
+
+def file_stats(path: str) -> list[os.stat_result]:
+    """``os.stat`` of every file of a dataset: the file itself, or each
+    file under a directory (unstattable files are skipped; [] if
+    absent)."""
+    if os.path.isdir(path):
+        stats = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                try:
+                    stats.append(os.stat(os.path.join(root, f)))
+                except OSError:
+                    pass
+        return stats
+    try:
+        return [os.stat(path)]
+    except OSError:
+        return []
 
 
 def dataset_size_bytes(path: str) -> int:
@@ -79,19 +135,7 @@ def dataset_size_bytes(path: str) -> int:
     production layout (ADVICE r10 #1: a partitioned events dataset
     would have been clamped to 2 state partitions). Branch on the
     layout explicitly instead."""
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return total
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 0
+    return sum(st.st_size for st in file_stats(path))
 
 
 def _parse_bytes(v: str) -> int:

@@ -210,6 +210,31 @@ def test_with_global_order_matches_global_windows(spark, sf_dir):
     assert {tuple(r) for r in got_g.collect()} == {tuple(r) for r in want_g.collect()}
 
 
+def test_with_global_order_null_running_sums(spark):
+    """NULL sources in a running sum: the result must equal the
+    single-partition window's — NULL only while the whole global prefix
+    is NULL. ids 0..199 in 4 buckets of about 50: ``w`` is NULL for
+    ids 0..69 (an all-NULL leading run covering bucket 0 and the start
+    of bucket 1) and for ids 100..129 (an all-NULL prefix of bucket 2,
+    whose rows must carry the earlier buckets' total)."""
+    from pyspark.sql import Window as W
+
+    from simplemapreduce_spark.functions.ranks import with_global_order
+
+    df = spark.range(200).select(
+        "id",
+        F.when(
+            (F.col("id") >= 70) & ~F.col("id").between(100, 129), F.col("id") % 7
+        ).alias("w"),
+    )
+    got = with_global_order(df, "id", running_sums=(("w", "cum_w"),), n_buckets=4)
+    wc = W.orderBy("id").rowsBetween(W.unboundedPreceding, W.currentRow)
+    want = df.select("id", "w", F.sum("w").over(wc).alias("cum_w"))
+    got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+    assert got_rows == want_rows
+    assert want_rows[69]["cum_w"] is None and want_rows[110]["cum_w"] is not None
+
+
 def test_binary_files_listing_conf_restored(spark, sf_dir):
     """q_source_binary_files scopes the file-discovery parallelism to
     its own read; the session conf must come back untouched (unset

@@ -71,3 +71,25 @@ def test_failed_write_leaves_no_marker(staging):
     assert not os.path.exists(os.path.join(path, scratch.MARKER))
     stage()
     assert calls == [path, path]
+
+
+def test_directory_source_rewritten_in_place_restages(staging):
+    """A directory's own stat does not change when a part file is
+    rewritten in place, so the stamp must come from the files inside
+    it; a single file keeps its ``mtime_ns:size`` stamp."""
+    sf_dir, calls, stage = staging
+    st = os.stat(sf_dir / "src.parquet")
+    assert scratch.table_stamp(str(sf_dir), "src") == f"{st.st_mtime_ns}:{st.st_size}"
+
+    (sf_dir / "src.parquet").unlink()
+    (sf_dir / "src.parquet").mkdir()
+    part = sf_dir / "src.parquet" / "part-0.parquet"
+    part.write_bytes(b"v1")
+    path = stage()
+    dir_stat = os.stat(sf_dir / "src.parquet")
+    part.write_bytes(b"version 2")
+    after = os.stat(sf_dir / "src.parquet")
+    assert (after.st_mtime_ns, after.st_size) == (dir_stat.st_mtime_ns, dir_stat.st_size)
+    assert stage() == path
+    assert calls == [path, path]
+    assert _marker(path) == scratch.table_stamp(str(sf_dir), "src")

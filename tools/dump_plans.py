@@ -6,7 +6,7 @@ Usage: python tools/dump_plans.py <round> <tag> [query ...]
   query  optional subset; default = full bench set (legacy + extended)
 
 Plans are captured at sf0.01 (plan shapes are SF-independent apart from
-AQE runtime rewrites, same rationale as gen_plan_manifest.py) unless
+AQE runtime rewrites, so one small scale is enough) unless
 $SPARK_GRAFT_SF_DIR overrides. Per-session counters are normalized
 before writing, so a before/after diff shows only real plan changes:
 expression ids (``#123``, ``#123L``) become ``#_``, exchange ids
