@@ -12,7 +12,7 @@ Spark-first shape, per iteration:
      k×dim partials per task), re-assemble the centroid array ordered
      by pos. All JVM-side.
 
-Everything is deterministic and RNG-free (default init = farthest-
+Everything is deterministic and RNG-free (init = farthest-
 first traversal, ties to lowest id); centroid coordinates are rounded each iteration so the
 float-sum partition-order jitter (~1e-13) can never flip a later
 assignment. k-means is iterative and therefore not oracle-expressible
@@ -41,6 +41,16 @@ def _sq_l2(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
+# The nearest of the ``cents`` array's (cid, ce) centroids to the row's
+# vector ``e``: a (d2, cid) struct, squared L2 rounded to 8 digits,
+# ties to the lowest cid.
+_NEAREST = (
+    "element_at(array_sort(transform(cents, c -> struct("
+    "round(aggregate(zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)),"
+    " 0.0D, (acc, x) -> acc + x), 8) as d2, c.cid as cid))), 1)"
+)
+
+
 def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid (squared-L2, ties to
     the lowest cid). `vectors`: (vec_id, e); `centroids`: (cid, ce).
@@ -54,11 +64,9 @@ def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     a pure map pass, so an iteration's only shuffle is the tiny
     (cell, pos) partial-mean aggregation in update_centroids."""
     cents = centroids.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
-    d2 = "round(aggregate(zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x), 8)"
-    best = f"element_at(array_sort(transform(cents, c -> struct({d2} as d2, c.cid as cid))), 1)"
     return (
         vectors.crossJoin(F.broadcast(cents))
-        .select("vec_id", "e", F.expr(best).alias("b"))
+        .select("vec_id", "e", F.expr(_NEAREST).alias("b"))
         .select(
             "vec_id", "e", F.col("b.cid").alias("cell"), F.col("b.d2").alias("d2")
         )
@@ -115,67 +123,27 @@ def farthest_first_init(vectors: DataFrame, k: int) -> DataFrame:
     return spark.createDataFrame(rows, schema="cid bigint, ce array<double>")
 
 
-_FIT_MEMO: dict[tuple[str, str], list] = {}
-
-
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int,
-    iters: int = 3,
-    init: str = "farthest",
-    memo_key: str | None = None,
-) -> DataFrame:
-    """Train k centroids with `iters` Lloyd iterations. Returns
-    (cid, ce). init='farthest' (default) seeds by deterministic
-    farthest-first traversal; init='first' takes the k lowest vec_ids.
+def kmeans_fit(vectors: DataFrame, k: int, iters: int = 3) -> DataFrame:
+    """Train k centroids with `iters` Lloyd iterations from a
+    farthest-first seeding. Returns (cid, ce).
 
     The centroid table is materialized to the driver between
     iterations (k×dim doubles — bytes, not data) so each iteration's
     plan starts from a literal table instead of a k-deep recursive
-    subtree that every later broadcast would recompute.
-
-    ``memo_key`` (callers embed corpus identity: sf_dir + table stamp
-    + hyperparameters) caches the TRAINED centroid rows per Spark
-    application: training is deterministic, so re-invocations of an
-    index-backed query rebuild the literal centroid table from k
-    cached rows instead of re-running ~7 driver-synchronized training
-    actions over the corpus — the "train once, serve many" lifecycle
-    of a production index (measured: q_sim_ivf_kmeans_topk 4.5 s ->
-    sub-second steady at sf0.1)."""
+    subtree that every later broadcast would recompute. The result is
+    always such a literal table, so callers memoize the trained
+    centroids with ``cache.memo_build`` and a repeat query runs no
+    training job (measured: q_sim_ivf_kmeans_topk 4.5 s -> sub-second
+    steady at sf0.1)."""
     spark = vectors.sparkSession
-    app = spark.sparkContext.applicationId
-    if memo_key is not None:
-        hit = _FIT_MEMO.get((app, memo_key))
-        if hit is not None:
-            return spark.createDataFrame(hit, schema="cid bigint, ce array<double>")
-    if init == "farthest":
-        cent = farthest_first_init(vectors, k)
-    else:
-        cent = (
-            vectors.orderBy("vec_id")
-            .limit(k)
-            .select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        )
-    spark = vectors.sparkSession
-    # `rows` stays lazy: farthest_first_init already returns a literal
-    # createDataFrame table, so iters=0 without a memo needs no driver
-    # action at all; the memo path collects below only if the Lloyd
-    # loop never ran.
-    rows = None
+    cent = farthest_first_init(vectors, k)
     for _ in range(iters):
-        assigned = assign_cells(vectors, cent)
-        new_cent = update_centroids(assigned)
+        new_cent = update_centroids(assign_cells(vectors, cent))
         # collect k tiny rows; re-create as a literal DataFrame so the
         # next iteration's broadcast is a local table, not a plan.
-        rows = new_cent.collect()
-        cent = spark.createDataFrame(rows, schema="cid bigint, ce array<double>")
-    if memo_key is not None:
-        if rows is None:
-            rows = cent.collect()
-            cent = spark.createDataFrame(rows, schema="cid bigint, ce array<double>")
-        _FIT_MEMO[(app, memo_key)] = [(r["cid"], r["ce"]) for r in rows]
-        for old in [kk for kk in _FIT_MEMO if kk[0] != app]:
-            del _FIT_MEMO[old]
+        cent = spark.createDataFrame(
+            new_cent.collect(), schema="cid bigint, ce array<double>"
+        )
     return cent
 
 
@@ -185,9 +153,7 @@ def inertia(vectors: DataFrame, centroids: DataFrame) -> float:
     return assign_cells(vectors, centroids).agg(F.sum("d2")).collect()[0][0]
 
 
-def kmeans_fit_grouped(
-    vectors: DataFrame, k: int, iters: int = 2, memo_key: str | None = None
-) -> DataFrame:
+def kmeans_fit_grouped(vectors: DataFrame, k: int, iters: int = 2) -> DataFrame:
     """Train an independent k-centroid codebook PER GROUP — all groups
     jointly, one Spark action per Lloyd iteration. `vectors`:
     (g, vec_id, e) → returns (g, cid, ce).
@@ -212,13 +178,6 @@ def kmeans_fit_grouped(
     from pyspark.sql import Window as W
 
     spark = vectors.sparkSession
-    app = spark.sparkContext.applicationId
-    if memo_key is not None:
-        hit = _FIT_MEMO.get((app, memo_key))
-        if hit is not None:
-            return spark.createDataFrame(
-                hit, schema="g int, cid bigint, ce array<double>"
-            )
     rn = F.row_number().over(W.partitionBy("g").orderBy("vec_id"))
     seed = (
         vectors.withColumn("rn", rn)
@@ -226,17 +185,12 @@ def kmeans_fit_grouped(
         .select("g", F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
     )
     rows = [(r["g"], r["cid"], r["ce"]) for r in seed.collect()]
-    d2 = (
-        "round(aggregate(zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)),"
-        " 0.0D, (acc, x) -> acc + x), 8)"
-    )
-    best = f"element_at(array_sort(transform(cents, c -> struct({d2} as d2, c.cid as cid))), 1)"
     for _ in range(iters):
         cent = spark.createDataFrame(rows, schema="g int, cid bigint, ce array<double>")
         books = cent.groupBy("g").agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
         assigned = (
             vectors.join(F.broadcast(books), "g")
-            .select("g", "e", F.expr(best + ".cid").alias("cell"))
+            .select("g", "e", F.expr(_NEAREST + ".cid").alias("cell"))
         )
         new_cent = (
             assigned.select("g", "cell", F.posexplode("e").alias("pos", "val"))
@@ -251,8 +205,4 @@ def kmeans_fit_grouped(
             )
         )
         rows = [(r["g"], r["cid"], r["ce"]) for r in new_cent.collect()]
-    if memo_key is not None:
-        _FIT_MEMO[(app, memo_key)] = rows
-        for old in [kk for kk in _FIT_MEMO if kk[0] != app]:
-            del _FIT_MEMO[old]
     return spark.createDataFrame(rows, schema="g int, cid bigint, ce array<double>")

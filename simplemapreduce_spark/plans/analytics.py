@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist, table_stamp
+from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import SESSION_GAP_MICROS, date_trunc_ntz, epoch_micros
 from simplemapreduce_spark.functions.vectors import array_pairs
@@ -176,8 +176,8 @@ def order_baskets(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     li = load_table(spark, sf_dir, "lineitem")
     op = memo_persist(
         li.select("l_orderkey", "l_partkey").distinct(),
-        f"basket.order_parts:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
+        "basket.order_parts",
+        sf_dir,
     )
     baskets = op.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
@@ -1088,9 +1088,7 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # |types|^2 rows; three rounds + totals all read it — clip the
     # corpus-window lineage once.
-    counted = memo_local_checkpoint(
-        counted, f"analytics.markov_matrix:{sf_dir}", table_stamp(sf_dir, "events")
-    )
+    counted = memo_local_checkpoint(counted, "analytics.markov_matrix", sf_dir)
     totals = counted.groupBy("from_type").agg(F.sum("n").alias("tot"))
     matrix = counted.join(totals, "from_type")
     states = counted.select(F.col("from_type").alias("s")).distinct()

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import tokens
 from simplemapreduce_spark.functions.vectors import array_pairs
-from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist, table_stamp
+from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist
 from simplemapreduce_spark.scratch import staged_once
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
@@ -178,7 +178,7 @@ def doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment the extended bench set made the funnel visible). Persisting
     the array table gives every consumer a materialization barrier:
     inferred filters now evaluate against the cached `arr` column.
-    Same (key, table-stamp) lifecycle as the MinHash signature cache;
+    Same memo lifecycle as the MinHash signature cache;
     the parquet-checkpoint dedup variant remains the 100 TB
     cross-job production form of the same idea."""
     d = ensure_parallelism(load_table(spark, sf_dir, "documents"))
@@ -190,8 +190,8 @@ def doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", tokens("text").alias("t"))
         .filter(F.size("t") >= 3)
         .select("doc_id", F.array_distinct(tri).alias("arr")),
-        f"dedup.doc_shingles:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "dedup.doc_shingles",
+        sf_dir,
     )
 
 
@@ -298,13 +298,13 @@ def lsh_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     the second parquet checkpoint alongside the signatures."""
     doc_hp = memo_persist(
         doc_hash_arrays(spark, sf_dir),
-        f"dedup.doc_hash_arrays:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "dedup.doc_hash_arrays",
+        sf_dir,
     )
     bands = memo_persist(
         minhash_bands_from_hashes(doc_hp),
-        f"dedup.minhash_bands:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "dedup.minhash_bands",
+        sf_dir,
     )
     return doc_hp, bands
 
@@ -1183,8 +1183,8 @@ def q_dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame
             "doc_id",
             F.transform("srt", lambda x: x["shingle"]).alias("full"),
         ),
-        f"dedup.ppjoin_sorted_arrays:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "dedup.ppjoin_sorted_arrays",
+        sf_dir,
     )
     n = F.size("full")
     pref_len = (n - F.ceil(F.lit(T_JAC) * n) + 1).cast("int")
@@ -1287,8 +1287,8 @@ def q_split_cluster_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memo_local_checkpoint discipline of LPA/k-core.
     assigned = memo_local_checkpoint(
         rep.select("doc_id", "rep", split.alias("split")),
-        f"dedup.cluster_split:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "dedup.cluster_split",
+        sf_dir,
     )
     pairs = edges.filter(F.col("src") < F.col("dst")).select(
         F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
@@ -1532,8 +1532,8 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluation). The pair union is candidate-bounded — tiny.
     tagged = memo_local_checkpoint(
         tagged,
-        f"dedup.method_pairs:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "dedup.method_pairs",
+        sf_dir,
     )
     # Seed counts from the static method list so a zero-pair detector
     # still reports (n=0) instead of vanishing from the matrix.

@@ -300,11 +300,11 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical sketch, so unlike opaque sketch binaries this one is
     exactly DuckDB-oracled."""
     d = load_table(spark, sf_dir, "documents")
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
+    from simplemapreduce_spark.cache import memo_persist
     from simplemapreduce_spark.functions.text import tokens
 
     # The token explosion feeds both the exact-count branch and the
-    # sketch build — persist it once (fixture-stamped) instead of
+    # sketch build — persist it once (per dataset version) instead of
     # scanning + exploding the corpus twice per invocation.
     # ensure_parallelism BEFORE the persist (round 10): the cached
     # relation inherits the scan's partitioning, so without the guard
@@ -313,8 +313,8 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_parallelism(d)
     toks = memo_persist(
         d.select(F.explode(tokens("text")).alias("token")),
-        f"extensions.cms_toks:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "extensions.cms_toks",
+        sf_dir,
     )
     counts = toks.groupBy("token").agg(F.count("*").alias("exact_n"))
     top = counts.orderBy(F.desc("exact_n"), "token").limit(_CMS_TOP)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist, table_stamp
+from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist
 from simplemapreduce_spark.functions.vectors import array_pairs
 from simplemapreduce_spark.plans.analytics import order_baskets
 from simplemapreduce_spark.sources.tables import load_table
@@ -98,9 +98,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-fact join — persist so the 3 iterations don't recompute it
     # (memoized per session: repeat invocations reuse one cache entry).
     )
-    probs = memo_persist(
-        probs, f"graph.pagerank_probs:{sf_dir}", table_stamp(sf_dir, "lineitem")
-    )
+    probs = memo_persist(probs, "graph.pagerank_probs", sf_dir)
     nodes = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node")
     )
@@ -218,9 +216,7 @@ def q_graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
         .agg(F.expr("(1000000 + count(*) - 1) div count(*)").alias("cost"))
     )
-    edges = memo_persist(
-        edges, f"graph.sssp_edges:{sf_dir}", table_stamp(sf_dir, "lineitem")
-    )
+    edges = memo_persist(edges, "graph.sssp_edges", sf_dir)
     nodes = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node")
     )
@@ -269,8 +265,8 @@ def copurchase_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
         .agg(F.count("*").alias("s"))
         .filter(F.col("s") >= 2)
         .select("u", "v"),
-        f"graph.copurchase_edges:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
+        "graph.copurchase_edges",
+        sf_dir,
     )
     adj = e.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
         e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
@@ -599,8 +595,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 7.8 s -> sub-second steady at sf0.1).
     alive = memo_local_checkpoint(
         adj.select("node").distinct(),
-        f"graph.kcore_alive0:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
+        "graph.kcore_alive0",
+        sf_dir,
     )
     stages = [("round_0", alive)]
     for r in range(_KCORE_ROUNDS):
@@ -614,8 +610,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         alive = memo_local_checkpoint(
             deg.filter(F.col("d") >= _KCORE_K).select("node"),
-            f"graph.kcore_alive{r + 1}:{sf_dir}",
-            table_stamp(sf_dir, "lineitem"),
+            f"graph.kcore_alive{r + 1}",
+            sf_dir,
         )
         stages.append((f"round_{r + 1}", alive))
     # One-pass trace over the union of tagged survivor sets. A stage
@@ -766,9 +762,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (quadratic in rounds; measured 3.7 s -> the dominant bench cost).
     # Persisting each round caps the whole trace at one |E|-join per
     # round, the same lineage discipline as q_dedup_clusters.
-    labels = memo_local_checkpoint(
-        labels, f"graph.lpa_labels0:{sf_dir}", table_stamp(sf_dir, "lineitem")
-    )
+    labels = memo_local_checkpoint(labels, "graph.lpa_labels0", sf_dir)
     states = [("round_0", labels)]
     for r in range(_LPA_ROUNDS):
         cnt = (
@@ -783,8 +777,8 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             cnt.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
             .select("node", "label"),
-            f"graph.lpa_labels{r + 1}:{sf_dir}",
-            table_stamp(sf_dir, "lineitem"),
+            f"graph.lpa_labels{r + 1}",
+            sf_dir,
         )
         states.append((f"round_{r + 1}", labels))
     # One-pass trace: tag each (persisted, node-sized) round state and

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.cache import memo_persist, table_stamp
+from simplemapreduce_spark.cache import memo_persist
 from simplemapreduce_spark.functions.text import tokens
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
@@ -256,8 +256,8 @@ def _tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.groupBy("doc_id", "token").agg(
             F.count("*").alias("cnt"), F.first("doc_len").alias("doc_len")
         ),
-        f"llm_text.tfidf_tf:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "llm_text.tfidf_tf",
+        sf_dir,
     )
 
 
@@ -1129,12 +1129,12 @@ def lexical_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     MEMO-PERSISTED: two catalog queries consume it (and the bench
     replays each 7x), the output is |queries| x |docs|-bounded, and
     the inverted-index join above it is the expensive part."""
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
+    from simplemapreduce_spark.cache import memo_persist
 
     return memo_persist(
         _lexical_scored_plan(spark, sf_dir),
-        f"llm.lex_scored:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "llm.lex_scored",
+        sf_dir,
     )
 
 
@@ -1236,8 +1236,8 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = memo_persist(
         base.select("is_train", F.explode(tri).alias("gram")).distinct(),
-        f"text_ngram_novelty_grams:{sf_dir}",
-        table_stamp(sf_dir, "documents"),
+        "text_ngram_novelty_grams",
+        sf_dir,
     )
     tr = g.filter(F.col("is_train")).select("gram")
     te = g.filter(~F.col("is_train")).select("gram")

@@ -233,10 +233,10 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
     index — built once per (corpus, session) and reused by every
     consumer (ANN search, semantic dedup): the interactive-session
     reuse argument of EDBT 2020 "Incremental ... Top-K Similarity
-    Search". memo_persist keys it by corpus stamp, same discipline as
+    Search". memo_persist keys it by dataset version, same discipline as
     the minhash signature cache. Returns (vectors, centroid-array row,
     sorted-cells SQL fragment, persisted assignment)."""
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
+    from simplemapreduce_spark.cache import memo_persist
 
     v = _vectors(spark, sf_dir)
     cent = v.filter(F.col("vec_id") < N_CENTROIDS).select(
@@ -252,8 +252,8 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
         v.crossJoin(F.broadcast(cents)).select(
             "vec_id", "e", F.expr(f"element_at({cells_sorted}, 1).cid").alias("cell")
         ),
-        f"ivf.assign:{sf_dir}",
-        table_stamp(sf_dir, "embeddings"),
+        "ivf.assign",
+        sf_dir,
     )
     return v, cents, cells_sorted, assign
 
@@ -438,17 +438,15 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one DuckDB CTE chain — was rows-only through round 3; recall
     vs the exact brute-force baseline and monotone inertia remain
     asserted in tests/test_quality_bounds.py."""
+    from simplemapreduce_spark.cache import memo_build
     from simplemapreduce_spark.operators.kmeans import assign_cells, kmeans_fit
 
-    from simplemapreduce_spark.cache import table_stamp
-
     v = _vectors(spark, sf_dir)
-    cent = kmeans_fit(
-        v,
-        k=N_CENTROIDS,
-        iters=KMEANS_ITERS,
-        memo_key=f"ivf_kmeans:{sf_dir}:{table_stamp(sf_dir, 'embeddings')}"
-        f":k{N_CENTROIDS}:i{KMEANS_ITERS}",
+    cent = memo_build(
+        spark,
+        "sim.ivf_kmeans_centroids",
+        sf_dir,
+        lambda: kmeans_fit(v, k=N_CENTROIDS, iters=KMEANS_ITERS),
     )
     assigned = assign_cells(v, cent).select("vec_id", "e", "cell")
     # probe: each query's N_PROBE nearest TRAINED centroids
@@ -796,14 +794,13 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s"),
     ).select(F.col("s.g").alias("g"), "vec_id", F.col("s.e").alias("e"))
-    from simplemapreduce_spark.cache import table_stamp
+    from simplemapreduce_spark.cache import memo_build
 
-    cb = kmeans_fit_grouped(
-        subs,
-        k=K_PQ,
-        iters=_PQ_ITERS,
-        memo_key=f"pq_codebooks:{sf_dir}:{table_stamp(sf_dir, 'embeddings')}"
-        f":k{K_PQ}:i{_PQ_ITERS}",
+    cb = memo_build(
+        spark,
+        "sim.pq_codebooks",
+        sf_dir,
+        lambda: kmeans_fit_grouped(subs, k=K_PQ, iters=_PQ_ITERS),
     ).withColumnRenamed("g", "m")
     # One broadcast row: codebooks[m+1] = cid-ordered list of centroids.
     books = (
@@ -1416,14 +1413,14 @@ def q_sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The candidate pool feeds THREE branches (both pairwise-sim sides
     # + the relevance list) and every greedy round chains windows on
     # top — clip the corpus-scan lineage once (|Q| x CAND_K rows).
-    from simplemapreduce_spark.cache import memo_local_checkpoint, table_stamp
+    from simplemapreduce_spark.cache import memo_local_checkpoint
 
     c = memo_local_checkpoint(
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _MMR_CAND_K)
         .drop("rn"),
-        f"sim.mmr_candidates:{sf_dir}",
-        table_stamp(sf_dir, "embeddings"),
+        "sim.mmr_candidates",
+        sf_dir,
     )
     # Pairwise candidate sims: |Q| x K x (K-1) rows — tiny, row-local.
     a = c.select(

@@ -1089,7 +1089,7 @@ def _daily_revenue_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the persist Spark recomputes the subtree, i.e. scans the
     corpus once per branch. The table itself is calendar-bounded
     (|days| rows), so everything downstream of the persist is tiny."""
-    from simplemapreduce_spark.cache import memo_persist, table_stamp
+    from simplemapreduce_spark.cache import memo_persist
 
     li = load_table(spark, sf_dir, "lineitem")
     day = F.floor(
@@ -1102,8 +1102,8 @@ def _daily_revenue_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy(day.alias("day"))
         .agg(F.sum(units).alias("u"))
         .select("day", F.floor((F.col("u") + 5000) / 10000).cast("long").alias("x")),
-        f"ts_daily_revenue:{sf_dir}",
-        table_stamp(sf_dir, "lineitem"),
+        "ts_daily_revenue",
+        sf_dir,
     )
 
 

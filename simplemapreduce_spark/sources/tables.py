@@ -55,25 +55,22 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[tuple[str, tuple], tuple[str, StructType]] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table. Declarative scan — filters/projections
-    applied by callers reach the parquet reader via Catalyst pushdown.
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet read schema of one table, as inferred under this
+    session's confs (``load_table`` reads with it; a file stream over
+    the table needs it up front).
 
     Inferring a parquet schema runs a Spark job, so each table's schema
-    is inferred once per file version and then read with
-    ``spark.read.schema``. The cache is keyed by the absolute path and
-    the session values of ``_INFERENCE_CONFS``; an entry holds for one
-    ``cache.table_stamp`` of the file, so a table rewritten in place is
-    inferred again. Every call still returns a fresh DataFrame, so two
-    loads of one table self-join with distinct attribute ids. Threads
-    that race on a miss each infer the same schema; no lock is needed.
+    is inferred once per file version. The cache is keyed by the
+    absolute path and the session values of ``_INFERENCE_CONFS``; an
+    entry holds for one ``cache.table_stamp`` of the file, so a table
+    rewritten in place is inferred again. Threads that race on a miss
+    each infer the same schema; no lock is needed.
 
-    ``events.ts`` is plain timestamp[us] parquet (no tz flag) — read
-    as TIMESTAMP_NTZ, exactly the naive TIMESTAMP DuckDB sees, so
-    rendered values agree on both engines regardless of session
-    timezone. (A TIMESTAMP(NANOS) fixture encoding — round 1 shipped
-    one — arrives as a nanosecond long via nanosAsLong and is
-    normalized to the same NTZ type below.)
+    ``events.ts`` is read with ``nanosAsLong`` set, so a
+    TIMESTAMP(NANOS) fixture encoding (round 1 shipped one) arrives as a
+    nanosecond long; ``normalize_table`` turns it into the NTZ type the
+    microsecond encoding reads as.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
@@ -94,17 +91,40 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     stamp = table_stamp(sf_dir, name)
     hit = _SCHEMAS.get(key)
     if hit is not None and hit[0] == stamp:
-        schema = hit[1]
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        schema = df.schema
-        _SCHEMAS[key] = (stamp, schema)
-    if name == "events" and "ts" in schema.names and schema["ts"].dataType == LongType():
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (stamp, schema)
+    return schema
+
+
+def normalize_table(df: DataFrame, name: str) -> DataFrame:
+    """Give a batch or streaming read of table ``name`` its engine
+    types: a nanosecond-long ``events.ts`` becomes the TIMESTAMP_NTZ
+    wall clock of the microsecond encoding."""
+    if name == "events" and "ts" in df.columns and df.schema["ts"].dataType == LongType():
         from simplemapreduce_spark.functions.time import micros_to_ntz
 
         df = df.withColumn("ts", micros_to_ntz(F.expr("ts div 1000")))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one synthetic table. Declarative scan — filters/projections
+    applied by callers reach the parquet reader via Catalyst pushdown.
+
+    The scan reads with the cached ``table_schema``, so a warm load
+    starts no Spark job. Every call returns a fresh DataFrame, so two
+    loads of one table self-join with distinct attribute ids.
+
+    ``events.ts`` is plain timestamp[us] parquet (no tz flag) — read
+    as TIMESTAMP_NTZ, exactly the naive TIMESTAMP DuckDB sees, so
+    rendered values agree on both engines regardless of session
+    timezone (a TIMESTAMP(NANOS) encoding is normalized to the same
+    type, see ``normalize_table``).
+    """
+    schema = table_schema(spark, sf_dir, name)
+    path = os.path.abspath(table_path(sf_dir, name))
+    return normalize_table(spark.read.schema(schema).parquet(path), name)
 
 
 def file_stats(path: str) -> list[os.stat_result]:

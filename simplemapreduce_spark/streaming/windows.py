@@ -35,27 +35,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import event_time_to_ntz, ntz_as_event_time
 from simplemapreduce_spark.session import scoped_conf
-
-# Streaming file sources require an explicit schema. events.ts is
-# plain timestamp[us] parquet (no tz flag) — TIMESTAMP_NTZ to Spark,
-# same type the batch loader (sources/tables.py) exposes, so batch
-# and stream plans share timestamp semantics.
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampNTZType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,16 +51,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     convert back with :func:`event_time_to_ntz` so rendered values
     match the naive timestamps DuckDB sees, on any session timezone.
 
-    Mirrors the batch loader's compat path (sources/tables.py): if the
-    fixture encodes ts as TIMESTAMP(NANOS) (round-1 layout, read as a
-    nanosecond long under nanosAsLong), normalize to the same NTZ
-    wall clock before the event-time conversion, so batch and stream
-    agree on either fixture generation.
+    File streams need their schema up front: the stream reads with the
+    batch loader's cached parquet schema and normalization
+    (``sources.tables.table_schema`` / ``normalize_table``), so batch
+    and stream agree on either ``ts`` encoding (TIMESTAMP(MICROS) or
+    the round-1 TIMESTAMP(NANOS)).
     """
-    from simplemapreduce_spark.functions.time import micros_to_ntz
-    from simplemapreduce_spark.sources.tables import load_table
-
-    import os
+    from simplemapreduce_spark.sources.tables import normalize_table, table_schema
 
     # Layout-aware source: the driver fixtures store events as a single
     # FILE (streaming's basePath must be a directory, hence parent dir
@@ -93,17 +74,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             return r.parquet(events_path)
         return r.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
 
-    batch_dtypes = dict(load_table(spark, sf_dir, "events").dtypes)
-    if batch_dtypes.get("ts") == "bigint":  # TIMESTAMP(NANOS) fixture
-        schema = T.StructType(
-            [
-                f if f.name != "ts" else T.StructField("ts", T.LongType(), True)
-                for f in EVENTS_RAW_SCHEMA.fields
-            ]
-        )
-        raw = reader(schema).withColumn("ts", micros_to_ntz(F.expr("ts div 1000")))
-    else:
-        raw = reader(EVENTS_RAW_SCHEMA)
+    raw = normalize_table(reader(table_schema(spark, sf_dir, "events")), "events")
     return raw.withColumn("ts", ntz_as_event_time("ts"))
 
 
@@ -667,8 +638,12 @@ def _late_replay_counts(spark: SparkSession, sf_dir: str, output_mode: str) -> D
     under a ~10-minute watermark, counted per (hour window, event
     type) and drained in ``output_mode``. Shared by
     q_stream_late_drop (append) and q_stream_update_mode (update)."""
+    from simplemapreduce_spark.sources.tables import load_table
+
+    # The staged batches are Spark-written from the batch load, so they
+    # carry its (normalized) schema.
     raw = (
-        spark.readStream.schema(EVENTS_RAW_SCHEMA)
+        spark.readStream.schema(load_table(spark, sf_dir, "events").schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(_stage_late_batches(spark, sf_dir))
     )

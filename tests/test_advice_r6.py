@@ -132,16 +132,21 @@ def test_degenerate_documents_match_oracle(spark, sf_dir):
 
 
 def test_kmeans_fit_iters_zero_with_memo(spark, sf_dir):
-    """iters=0 + memo_key must return the seed centroids (and store the
-    memo) instead of raising NameError on the unbound `rows`."""
-    from simplemapreduce_spark.operators.kmeans import kmeans_fit
+    """iters=0 memoized through ``cache.memo_build`` must return the
+    seed centroids (and store them) instead of raising NameError on an
+    unbound `rows`; a hit returns the stored table without training."""
+    from simplemapreduce_spark.cache import memo_build
+    from simplemapreduce_spark.operators.kmeans import farthest_first_init, kmeans_fit
     from simplemapreduce_spark.plans.similarity import _vectors
 
     v = _vectors(spark, sf_dir)
-    cent = kmeans_fit(v, k=4, iters=0, init="first", memo_key="advice-r6-iters0")
+    key = "advice-r6-iters0"
+    cent = memo_build(spark, key, sf_dir, lambda: kmeans_fit(v, k=4, iters=0))
     rows = sorted((r["cid"], tuple(r["ce"])) for r in cent.collect())
     assert len(rows) == 4
-    again = kmeans_fit(v, k=4, iters=0, init="first", memo_key="advice-r6-iters0")
+    seed = farthest_first_init(v, 4).collect()
+    assert rows == sorted((r["cid"], tuple(r["ce"])) for r in seed)
+    again = memo_build(spark, key, sf_dir, lambda: pytest.fail("a hit must not train"))
     assert sorted((r["cid"], tuple(r["ce"])) for r in again.collect()) == rows
 
 

@@ -37,18 +37,22 @@ def test_kmeans_iters0_farthest_returns_init_without_extra_action(spark, sf_dir)
 
 
 def test_kmeans_iters0_memo_still_materializes(spark, sf_dir):
-    from simplemapreduce_spark.operators.kmeans import _FIT_MEMO, kmeans_fit
+    import os
+
+    from simplemapreduce_spark import cache
+    from simplemapreduce_spark.operators.kmeans import kmeans_fit
     from simplemapreduce_spark.plans.similarity import _vectors
 
     v = _vectors(spark, sf_dir)
     key = "advice-r7-iters0-memo"
-    app = spark.sparkContext.applicationId
-    _FIT_MEMO.pop((app, key), None)
-    got = kmeans_fit(v, k=2, iters=0, memo_key=key)
-    assert (app, key) in _FIT_MEMO, "memo must be stored even when iters=0"
-    assert len(_FIT_MEMO[(app, key)]) == 2
+    ident = (spark.sparkContext.applicationId, key, os.path.abspath(sf_dir))
+    got = cache.memo_build(spark, key, sf_dir, lambda: kmeans_fit(v, k=2, iters=0))
+    assert cache._MEMO[ident][1] is got, "memo must be stored even when iters=0"
+    plan = got._jdf.queryExecution().analyzed().toString().strip()
+    assert len(plan.splitlines()) == 1, f"centroids must be one leaf of driver rows: {plan}"
     assert got.count() == 2
-    _FIT_MEMO.pop((app, key), None)
+    with cache._LOCK:
+        cache._MEMO.pop(ident, None)
 
 
 def test_approx_topk_combine_layout_is_repartition_not_coalesce(spark, sf_dir):

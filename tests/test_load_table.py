@@ -120,6 +120,26 @@ def test_nanosecond_events_ts_reads_as_ntz_when_cached(spark, tmp_path):
     assert first.collect() == second.collect()
 
 
+def test_stream_events_matches_batch_on_nanosecond_ts(spark, sf_dir, tmp_path):
+    """A file stream over a TIMESTAMP(NANOS) ``events`` reads the rows
+    the batch load reads."""
+    from pyspark.sql import functions as F
+
+    from simplemapreduce_spark.functions.time import event_time_to_ntz
+    from simplemapreduce_spark.streaming.windows import run_stream_to_table, stream_events
+
+    data = str(tmp_path)
+    t = pq.read_table(tables.table_path(sf_dir, "events"))
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column(i).cast(pa.timestamp("ns")))
+    pq.write_table(t, tables.table_path(data, "events"))
+    stream = stream_events(spark, data).select("event_id", event_time_to_ntz(F.col("ts")).alias("ts"))
+    streamed = run_stream_to_table(stream, "append", data).collect()
+    batch = load_table(spark, data, "events").select("event_id", "ts").collect()
+    assert len(batch) > 0
+    assert sorted(streamed) == sorted(batch)
+
+
 def test_self_join_of_two_loads_resolves(spark, sf_dir):
     load_table(spark, sf_dir, "orders")
     a = load_table(spark, sf_dir, "orders")
