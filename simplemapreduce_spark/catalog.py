@@ -10,6 +10,15 @@ tables. The driver's correctness gate compares the two
 * float aggregates are rounded identically on both sides;
 * queries whose semantics are approximate / not SQL-expressible
   register without an oracle (driver then does a rows-only check).
+
+Oracle SQL has one definition per fragment. A fragment that oracles of
+one module share is a constant beside its queries (``dedup._SQL_LINES``);
+one that oracles of several modules share lives in ``oracle_sql.py``
+(the tokenizer, the session marks, the order-part baskets). A fragment
+is shared only where every oracle using it renders byte-for-byte as
+before; copies that differ in indentation, a ``MATERIALIZED`` fence or
+a constant stay spelled out. ``tests/test_oracle_fragments.py`` checks
+the rule without Spark.
 """
 
 from __future__ import annotations

@@ -32,6 +32,24 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def sq_l2(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance of two equal-length arrays."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def sq_l2_sql(a: str, b: str) -> str:
+    """:func:`sq_l2` as Spark SQL text over the array expressions ``a``
+    and ``b``, for kernels written inside an ``F.expr`` lambda."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        " 0.0D, (acc, x) -> acc + x)"
+    )
+
+
 def array_pairs(arr: str, fields: str) -> Column:
     """Explode every pair ``(x, y)`` of array column ``arr`` with ``x``
     before ``y``, one row per pair, as ``struct(<fields>)`` — ``fields``

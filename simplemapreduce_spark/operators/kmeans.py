@@ -32,22 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from simplemapreduce_spark.functions.vectors import sq_l2_sql
 
-def _sq_l2(a: F.Column, b: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
+# Digits each Lloyd update rounds a centroid coordinate to, so
+# partition-order float jitter cannot flip a later assignment.
+_CENTROID_DIGITS = 6
 
 # The nearest of the ``cents`` array's (cid, ce) centroids to the row's
 # vector ``e``: a (d2, cid) struct, squared L2 rounded to 8 digits,
 # ties to the lowest cid.
 _NEAREST = (
     "element_at(array_sort(transform(cents, c -> struct("
-    "round(aggregate(zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)),"
-    " 0.0D, (acc, x) -> acc + x), 8) as d2, c.cid as cid))), 1)"
+    f"round({sq_l2_sql('e', 'c.ce')}, 8) as d2, c.cid as cid))), 1)"
 )
 
 
@@ -73,13 +69,13 @@ def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def update_centroids(assigned: DataFrame, round_digits: int = 6) -> DataFrame:
+def update_centroids(assigned: DataFrame) -> DataFrame:
     """New centroid = element-wise mean of each cell's members.
     Rounded so partition-order float jitter can't flip assignments."""
     return (
         assigned.select("cell", F.posexplode("e").alias("pos", "val"))
         .groupBy("cell", "pos")
-        .agg(F.round(F.avg("val"), round_digits).alias("m"))
+        .agg(F.round(F.avg("val"), _CENTROID_DIGITS).alias("m"))
         .groupBy("cell")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
         .select(
@@ -195,7 +191,7 @@ def kmeans_fit_grouped(vectors: DataFrame, k: int, iters: int = 2) -> DataFrame:
         new_cent = (
             assigned.select("g", "cell", F.posexplode("e").alias("pos", "val"))
             .groupBy("g", "cell", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
+            .agg(F.round(F.avg("val"), _CENTROID_DIGITS).alias("m"))
             .groupBy("g", "cell")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
             .select(

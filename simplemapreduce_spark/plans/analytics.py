@@ -19,6 +19,7 @@ from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import SESSION_GAP_MICROS, date_trunc_ntz, epoch_micros
 from simplemapreduce_spark.functions.vectors import array_pairs
+from simplemapreduce_spark.oracle_sql import SQL_ORDER_PARTS, SQL_SESSION_MARKS
 from simplemapreduce_spark.sources.tables import load_table
 
 
@@ -188,7 +189,7 @@ def order_baskets(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 @query(
     "q_market_basket_pairs",
     oracle=f"""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    WITH {SQL_ORDER_PARTS},
     n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM op),
     pc AS (SELECT l_partkey, COUNT(*) AS n_with FROM op GROUP BY 1),
     ab AS (
@@ -769,21 +770,13 @@ def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BOUNCE_GAP_US = SESSION_GAP_MICROS
-
-
 @query(
     "q_sessions_bounce_rate",
     oracle=f"""
     WITH marked AS (
       SELECT user_id, ts, event_id,
              CASE WHEN LAG(ts) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > {_BOUNCE_GAP_US}
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT *, SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                    {SQL_SESSION_MARKS}
                                   ROWS UNBOUNDED PRECEDING) AS sess
       FROM marked
     ), sessions AS (
@@ -818,7 +811,7 @@ def q_sessions_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros = epoch_micros("ts")
     is_new = F.when(
         F.lag("ts").over(w).isNull()
-        | ((micros - F.lag(micros).over(w)) > F.lit(_BOUNCE_GAP_US)),
+        | ((micros - F.lag(micros).over(w)) > F.lit(SESSION_GAP_MICROS)),
         1,
     ).otherwise(0)
     sess = F.sum(is_new).over(

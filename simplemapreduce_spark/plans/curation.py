@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import tokens
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 
 # Spark-side bigram array from a `toks` array column (same construction
 # as plans/llm_text.py q_text_bigrams).
@@ -46,8 +46,8 @@ _BIGRAMS_EXPR = (
     oracle=f"""
     WITH b AS (
       SELECT doc_id,
-             list_transform(range(1, len({_SQL_TOKENS})),
-                            i -> {_SQL_TOKENS}[i] || ' ' || {_SQL_TOKENS}[i+1]) AS bg
+             list_transform(range(1, len({SQL_TOKENS})),
+                            i -> {SQL_TOKENS}[i] || ' ' || {SQL_TOKENS}[i+1]) AS bg
       FROM documents
     )
     SELECT doc_id,
@@ -297,9 +297,9 @@ LENGTH_BUCKET = 16
 @query(
     "q_length_histogram",
     oracle=f"""
-    SELECT CAST((len({_SQL_TOKENS}) // {LENGTH_BUCKET}) * {LENGTH_BUCKET} AS BIGINT) AS bucket_lo,
+    SELECT CAST((len({SQL_TOKENS}) // {LENGTH_BUCKET}) * {LENGTH_BUCKET} AS BIGINT) AS bucket_lo,
            COUNT(*) AS n_docs,
-           CAST(SUM(len({_SQL_TOKENS})) AS BIGINT) AS total_tokens
+           CAST(SUM(len({SQL_TOKENS})) AS BIGINT) AS total_tokens
     FROM documents
     GROUP BY 1
     """,
@@ -327,7 +327,7 @@ PACK_BUDGET = 2048
     "q_pack_token_budget",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, len({_SQL_TOKENS}) AS n_tokens FROM documents
+      SELECT doc_id, lang, len({SQL_TOKENS}) AS n_tokens FROM documents
     )
     SELECT doc_id, lang, n_tokens,
            CAST((SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
@@ -426,7 +426,7 @@ def q_text_url_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
              (n_chars BETWEEN 100 AND 5000) AS len_ok,
              (CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
                 / GREATEST(length(text), 1)) < 0.3 AS digit_ok,
-             len({_SQL_TOKENS}) >= 5 AS tokens_ok
+             len({SQL_TOKENS}) >= 5 AS tokens_ok
       FROM documents
     )
     SELECT 'len' AS rule, COUNT(*) FILTER (WHERE NOT len_ok) AS n_failing FROM scored

@@ -28,6 +28,7 @@ from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import tokens
 from simplemapreduce_spark.functions.vectors import array_pairs
 from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.scratch import staged_once
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
@@ -35,12 +36,11 @@ N_HASHES = 16
 N_BANDS = 4  # 4 rows per band; P(candidate) = 1-(1-j^4)^4
 MAX_BUCKET = 64  # hot-bucket cap: larger band buckets are stop-shingle noise
 
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 # distinct word-3-gram shingles per document (SQL form)
 _SQL_SHINGLES = f"""
   SELECT DISTINCT doc_id,
          unnest(list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-  FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+  FROM (SELECT doc_id, {SQL_TOKENS} AS t FROM documents)
   WHERE len(t) >= 3
 """
 
@@ -113,6 +113,8 @@ def q_dedup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-dup: exact n-gram Jaccard (baseline) and MinHash-LSH (scale path)
 # ---------------------------------------------------------------------------
 
+# The exact Jaccard of every pair of documents that share a shingle;
+# each oracle adds its own threshold.
 _SQL_JACCARD_FROM_PAIRS = """
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
     inter AS (
@@ -124,9 +126,7 @@ _SQL_JACCARD_FROM_PAIRS = """
            CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
     FROM inter
     JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
-"""
+    JOIN sizes sb ON sb.doc_id = doc_b"""
 
 
 @query(
@@ -134,6 +134,8 @@ _SQL_JACCARD_FROM_PAIRS = """
     oracle=f"""
     WITH shingles AS ({_SQL_SHINGLES}),
     {_SQL_JACCARD_FROM_PAIRS}
+    WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
+
     """,
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,7 +324,7 @@ _SQL_DOC_SHINGLES = f"""
   SELECT doc_id,
          list_distinct(list_transform(range(1, len(t) - 1),
                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS arr
-  FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+  FROM (SELECT doc_id, {SQL_TOKENS} AS t FROM documents)
   WHERE len(t) >= 3
 """
 
@@ -355,8 +357,9 @@ _SQL_MINHASH_BANDS = f"""
 """
 
 
-_SQL_MINHASH_LSH_ORACLE = f"""
-    WITH {_SQL_MINHASH_BANDS},
+# The LSH candidate pairs (doc_a < doc_b) of the banded signatures:
+# pairs that share a band bucket of at most MAX_BUCKET documents.
+_SQL_LSH_CANDIDATES = f"""{_SQL_MINHASH_BANDS},
     bucket_ok AS (
       SELECT band, band_hash FROM bands
       GROUP BY band, band_hash
@@ -368,7 +371,11 @@ _SQL_MINHASH_LSH_ORACLE = f"""
       JOIN bucket_ok k ON a.band = k.band AND a.band_hash = k.band_hash
       JOIN bands b
         ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    ),
+    )"""
+
+
+_SQL_MINHASH_LSH_ORACLE = f"""
+    WITH {_SQL_LSH_CANDIDATES},
     scored AS (
       SELECT c.doc_a, c.doc_b,
              CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE)
@@ -492,19 +499,7 @@ def q_dedup_minhash_lsh_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_containment",
     oracle=f"""
-    WITH {_SQL_MINHASH_BANDS},
-    bucket_ok AS (
-      SELECT band, band_hash FROM bands
-      GROUP BY band, band_hash
-      HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET}
-    ),
-    candidates AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bucket_ok k ON a.band = k.band AND a.band_hash = k.band_hash
-      JOIN bands b
-        ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    )
+    WITH {_SQL_LSH_CANDIDATES}
     SELECT c.doc_a, c.doc_b,
            CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE)
              / LEAST(len(sa.hs), len(sb.hs)) AS containment
@@ -554,7 +549,7 @@ def _simhash_sql_bits() -> str:
     "q_dedup_simhash",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
     ), counted AS (
       SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2
     )
@@ -596,7 +591,7 @@ _SIM_BAND_BITS = _SIMHASH_BITS // 4  # 4 bands of 4 bits
     "q_dedup_simhash_pairs",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
     ), counted AS (
       SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2
     ), sigs AS (
@@ -728,19 +723,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared CTE chain: LSH candidates -> verified pairs -> connected
 # components via a recursive CTE (the SQL twin of the iterative
 # min-label propagation below).
-_SQL_COMPONENTS = f"""{_SQL_MINHASH_BANDS},
-    bucket_ok AS (
-      SELECT band, band_hash FROM bands
-      GROUP BY band, band_hash
-      HAVING COUNT(*) BETWEEN 2 AND {MAX_BUCKET}
-    ),
-    candidates AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bucket_ok k ON a.band = k.band AND a.band_hash = k.band_hash
-      JOIN bands b
-        ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    ),
+_SQL_COMPONENTS = f"""{_SQL_LSH_CANDIDATES},
     pairs AS (
       SELECT c.doc_a, c.doc_b
       FROM candidates c
@@ -877,11 +860,11 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_incremental",
-    oracle="""
+    oracle=f"""
     WITH fps AS (
       SELECT doc_id,
              md5(array_to_string(list_sort(list_distinct(
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))), ' ')) AS fp
+               {SQL_TOKENS})), ' ')) AS fp
       FROM documents
     ), existing AS (
       SELECT DISTINCT fp FROM fps WHERE doc_id % 2 = 0
@@ -935,10 +918,9 @@ def _doc_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_dedup_lines",
-    oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents WHERE len({_SQL_TOKENS}) >= 1),
+# ``lines``: each non-empty document cut into LINE_TOKENS-token lines,
+# numbered by ``pos``.
+_SQL_LINES = f"""toks AS (SELECT doc_id, {SQL_TOKENS} AS t FROM documents WHERE len({SQL_TOKENS}) >= 1),
     pos AS (
       SELECT doc_id, t, unnest(range(0, (len(t) + {LINE_TOKENS - 1}) // {LINE_TOKENS})) AS pos
       FROM toks
@@ -947,7 +929,13 @@ def _doc_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, pos,
              array_to_string(t[(pos * {LINE_TOKENS} + 1):(pos * {LINE_TOKENS} + {LINE_TOKENS})], ' ') AS line
       FROM pos
-    ),
+    )"""
+
+
+@query(
+    "q_dedup_lines",
+    oracle=f"""
+    WITH {_SQL_LINES},
     rk AS (
       SELECT doc_id, pos, line,
              ROW_NUMBER() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
@@ -1004,16 +992,7 @@ MAX_LINE_DOCS = 2  # boilerplate threshold: lines in more docs are dropped
 @query(
     "q_dedup_lines_frequency",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents WHERE len({_SQL_TOKENS}) >= 1),
-    pos AS (
-      SELECT doc_id, t, unnest(range(0, (len(t) + {LINE_TOKENS - 1}) // {LINE_TOKENS})) AS pos
-      FROM toks
-    ),
-    lines AS (
-      SELECT doc_id, pos,
-             array_to_string(t[(pos * {LINE_TOKENS} + 1):(pos * {LINE_TOKENS} + {LINE_TOKENS})], ' ') AS line
-      FROM pos
-    ),
+    WITH {_SQL_LINES},
     hot AS (
       SELECT line FROM lines GROUP BY line
       HAVING COUNT(DISTINCT doc_id) > {MAX_LINE_DOCS}
@@ -1117,18 +1096,7 @@ def q_dedup_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_jaccard_prefix_filter",
     oracle=f"""
-    WITH shingles AS ({_SQL_SHINGLES}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-      FROM shingles a JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
+    WITH shingles AS ({_SQL_SHINGLES}),{_SQL_JACCARD_FROM_PAIRS}
     WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.7
     """,
 )
@@ -1383,7 +1351,7 @@ _XSRC_PREFIX = 5  # tokens in the prefix fingerprint
     oracle=f"""
     WITH toks AS (
       SELECT source,
-             list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS t
+             {SQL_TOKENS} AS t
       FROM documents
     ), f AS (
       SELECT DISTINCT source,

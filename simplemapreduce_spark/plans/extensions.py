@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.operators.map_reduce import map_reduce
 from simplemapreduce_spark.operators.multimodal import documents_as_media, extract_features
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.sources.tables import ensure_parallelism
 from simplemapreduce_spark.sources.tables import load_table
 
@@ -262,7 +263,7 @@ _CMS_TOP = 10
     "q_sketch_count_min",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) AS token
+      SELECT unnest({SQL_TOKENS}) AS token
       FROM documents
     ), counts AS (
       SELECT token, COUNT(*) AS exact_n FROM toks GROUP BY token

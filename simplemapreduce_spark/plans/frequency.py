@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import tokens
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 
 # Report tokens with frequency > n/_HH_K; the sketch keeps _MG_CAP
 # counters per partition. The candidate superset guarantee needs
@@ -65,7 +65,7 @@ def _mg_sketch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     "q_heavy_hitters",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT unnest({SQL_TOKENS}) AS token FROM documents
     ),
     n AS (SELECT COUNT(*) AS n_total FROM toks)
     SELECT token,
@@ -118,7 +118,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_token_freq_spectrum",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT unnest({SQL_TOKENS}) AS token FROM documents
     ),
     tf AS (SELECT token, COUNT(*) AS cnt FROM toks GROUP BY token)
     SELECT CAST(cnt AS BIGINT) AS freq,

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.cache import memo_local_checkpoint, memo_persist
 from simplemapreduce_spark.functions.vectors import array_pairs
+from simplemapreduce_spark.oracle_sql import SQL_ORDER_PARTS
 from simplemapreduce_spark.plans.analytics import order_baskets
 from simplemapreduce_spark.sources.tables import load_table
 
@@ -274,16 +275,23 @@ def copurchase_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     return e, adj
 
 
-@query(
-    "q_graph_triangles",
-    oracle="""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
+# The body of the co-purchase edge CTE ``e`` over ``op``
+# (oracle_sql.SQL_ORDER_PARTS): the oracle twin of copurchase_graph's
+# edges. The continuation lines are indented for a CTE written four
+# spaces in.
+_SQL_CO_PURCHASE_EDGES = """SELECT a.l_partkey AS u, b.l_partkey AS v
       FROM op a JOIN op b
         ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
       GROUP BY 1, 2
-      HAVING COUNT(*) >= 2
+      HAVING COUNT(*) >= 2"""
+
+
+@query(
+    "q_graph_triangles",
+    oracle=f"""
+    WITH {SQL_ORDER_PARTS},
+    e AS (
+      {_SQL_CO_PURCHASE_EDGES}
     ),
     tri AS (
       SELECT e1.u AS a, e1.v AS b, e2.v AS c
@@ -403,14 +411,10 @@ def q_graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_graph_common_neighbors",
-    oracle="""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    oracle=f"""
+    WITH {SQL_ORDER_PARTS},
     e AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= 2
+      {_SQL_CO_PURCHASE_EDGES}
     ),
     adj AS (
       SELECT u AS node, v AS nbr FROM e
@@ -552,13 +556,9 @@ def _kcore_oracle() -> str:
       SELECT node FROM deg{r} WHERE d >= {_KCORE_K})"""
         )
     return f"""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    WITH {SQL_ORDER_PARTS},
     e AS MATERIALIZED (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= 2
+      {_SQL_CO_PURCHASE_EDGES}
     ), {", ".join(rounds)}
     SELECT 'round_0' AS stage, CAST(COUNT(*) AS BIGINT) AS n_alive,
            CAST(MIN(node) AS BIGINT) AS min_node FROM alive0
@@ -696,13 +696,9 @@ def _lpa_oracle() -> str:
     # exponentially in rounds (24 GB no-spill cap blown at the 10x
     # replica scale). Fences only; same results.
     parts = [
-        """op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        f"""{SQL_ORDER_PARTS},
     e AS MATERIALIZED (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= 2
+      {_SQL_CO_PURCHASE_EDGES}
     ), adj AS MATERIALIZED (SELECT u AS node, v AS nbr FROM e UNION ALL SELECT v, u FROM e),
     lab0 AS MATERIALIZED (SELECT DISTINCT node, node AS label FROM adj)"""
     ]

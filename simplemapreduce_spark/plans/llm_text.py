@@ -28,23 +28,23 @@ from pyspark.sql import functions as F
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.cache import memo_persist
 from simplemapreduce_spark.functions.text import tokens
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
 # Tiny deterministic stopword list shared by quality scoring and the
 # language-ID heuristic (expressible identically in SQL).
 STOPWORDS_EN = ("the", "a", "and", "of", "to", "in", "is")
 
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 
 
 @query(
     "q_text_token_stats",
     oracle=f"""
     SELECT doc_id,
-           len({_SQL_TOKENS}) AS n_tokens,
+           len({SQL_TOKENS}) AS n_tokens,
            n_chars,
-           CASE WHEN len({_SQL_TOKENS}) = 0 THEN CAST(0 AS DOUBLE)
-                ELSE CAST(length(replace(text, ' ', '')) AS DOUBLE) / len({_SQL_TOKENS})
+           CASE WHEN len({SQL_TOKENS}) = 0 THEN CAST(0 AS DOUBLE)
+                ELSE CAST(length(replace(text, ' ', '')) AS DOUBLE) / len({SQL_TOKENS})
            END AS avg_token_len
     FROM documents
     """,
@@ -74,9 +74,9 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
              / GREATEST(length(text), 1) AS punct_ratio,
            CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
              / GREATEST(length(text), 1) AS digit_ratio,
-           CAST(len(list_filter({_SQL_TOKENS},
+           CAST(len(list_filter({SQL_TOKENS},
                 t -> list_contains(['the','a','and','of','to','in','is'], lower(t)))) AS DOUBLE)
-             / GREATEST(len({_SQL_TOKENS}), 1) AS stopword_ratio,
+             / GREATEST(len({SQL_TOKENS}), 1) AS stopword_ratio,
            CASE WHEN length(text) BETWEEN 100 AND 5000 THEN 1 ELSE 0 END AS length_ok
     FROM documents
     """,
@@ -128,19 +128,24 @@ def _predicted_lang() -> Column:
     )
 
 
+# ``scored``: each document's stopword hits per language, the input of
+# the langid heuristic.
+_SQL_LANGID_SCORED = f"""scored AS (
+      SELECT doc_id, lang,
+             len(list_filter({SQL_TOKENS},
+                 t -> list_contains(['the','and','of','is','a'], lower(t)))) AS en_hits,
+             len(list_filter({SQL_TOKENS},
+                 t -> list_contains(['der','und','die','das','ist'], lower(t)))) AS de_hits,
+             len(list_filter({SQL_TOKENS},
+                 t -> list_contains(['el','la','de','los','es'], lower(t)))) AS es_hits
+      FROM documents
+    )"""
+
+
 @query(
     "q_text_langid",
     oracle=f"""
-    WITH scored AS (
-      SELECT doc_id, lang,
-             len(list_filter({_SQL_TOKENS},
-                 t -> list_contains(['the','and','of','is','a'], lower(t)))) AS en_hits,
-             len(list_filter({_SQL_TOKENS},
-                 t -> list_contains(['der','und','die','das','ist'], lower(t)))) AS de_hits,
-             len(list_filter({_SQL_TOKENS},
-                 t -> list_contains(['el','la','de','los','es'], lower(t)))) AS es_hits
-      FROM documents
-    )
+    WITH {_SQL_LANGID_SCORED}
     SELECT doc_id, lang,
            CASE WHEN en_hits >= de_hits AND en_hits >= es_hits AND en_hits > 0 THEN 'en'
                 WHEN de_hits >= es_hits AND de_hits > 0 THEN 'de'
@@ -177,7 +182,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_bigrams",
     oracle=f"""
-    WITH toks AS (SELECT {_SQL_TOKENS} AS t FROM documents),
+    WITH toks AS (SELECT {SQL_TOKENS} AS t FROM documents),
     bigrams AS (
       SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bigram
       FROM toks
@@ -263,9 +268,9 @@ def _tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_tfidf",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) AS token
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token
       FROM documents
     ),
     tf AS (SELECT doc_id, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -305,7 +310,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTE chain producing ce(doc_id, n_bigrams, cross_entropy) — shared by
 # the bigram-LM score query and the perplexity-bucket filter oracle.
 _SQL_BIGRAM_CE = f"""
-    toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents),
+    toks AS (SELECT doc_id, {SQL_TOKENS} AS t FROM documents),
     db AS (
       SELECT doc_id,
              unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bg
@@ -436,7 +441,7 @@ def q_text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_bpe_pairs",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT unnest({SQL_TOKENS}) AS token FROM documents
     ), pairs AS (
       SELECT unnest(list_transform(range(1, length(token)),
                     i -> substr(token, CAST(i AS INT), 2))) AS pair
@@ -480,14 +485,14 @@ _BM25_TERMS = ("red", "widget", "small")
     "q_text_bm25",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
     ), tf AS (
       SELECT doc_id, token, COUNT(*) AS cnt FROM toks GROUP BY 1, 2
     ), dl AS (
       SELECT doc_id, COUNT(*) AS doc_len FROM toks GROUP BY 1
     ), stats AS (
       SELECT COUNT(*) AS n_docs,
-             CAST(SUM(len({_SQL_TOKENS})) AS DOUBLE) / COUNT(*) AS avg_len
+             CAST(SUM(len({SQL_TOKENS})) AS DOUBLE) / COUNT(*) AS avg_len
       FROM documents
     ), dfreq AS (
       SELECT token, COUNT(DISTINCT doc_id) AS n_with FROM toks GROUP BY 1
@@ -555,7 +560,7 @@ VOCAB_K = 20  # tokenizer-eval vocabulary: top-K corpus tokens
     "q_text_vocab_coverage",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
     ),
     freq AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token),
     vocab AS (
@@ -609,7 +614,7 @@ _NEG_LEX = ("slow", "small", "dup")
 @query(
     "q_text_sentiment_lexicon",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+    WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS t FROM documents)
     SELECT doc_id,
            CAST(len(list_filter(t, x -> list_contains({list(_POS_LEX)}, x))) AS BIGINT) AS n_pos,
            CAST(len(list_filter(t, x -> list_contains({list(_NEG_LEX)}, x))) AS BIGINT) AS n_neg,
@@ -663,7 +668,7 @@ def q_text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_js_divergence",
     oracle=f"""
     WITH toks AS (
-      SELECT lang, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT lang, unnest({SQL_TOKENS}) AS token FROM documents
       WHERE lang IN ('en', 'fr')
     ),
     c AS (SELECT lang, token, COUNT(*) AS n FROM toks GROUP BY 1, 2),
@@ -731,7 +736,7 @@ def q_text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_skipgram_pairs",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
     pairs AS (
       SELECT toks[i] AS w, toks[i + d] AS c, d
       FROM t
@@ -775,7 +780,7 @@ def q_text_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_pmi",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
     pairs AS (
       SELECT toks[i] AS w, toks[i + 1] AS c
       FROM t CROSS JOIN UNNEST(range(1, len(toks))) u(i)
@@ -845,7 +850,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
       SELECT source, unnest(t) AS token
-      FROM (SELECT source, {_SQL_TOKENS} AS t FROM documents)
+      FROM (SELECT source, {SQL_TOKENS} AS t FROM documents)
     ),
     tf AS (SELECT source, token, COUNT(*) AS tf FROM tok GROUP BY source, token),
     cw AS (SELECT source, SUM(tf) AS class_words FROM tf GROUP BY source),
@@ -919,7 +924,7 @@ def q_text_ctfidf_class_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
       SELECT unnest(t) AS token
-      FROM (SELECT {_SQL_TOKENS} AS t FROM documents)
+      FROM (SELECT {SQL_TOKENS} AS t FROM documents)
     ),
     freq AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token),
     ranked AS (
@@ -968,7 +973,7 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, unnest(t) AS token
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS t FROM documents)
+      FROM (SELECT doc_id, {SQL_TOKENS} AS t FROM documents)
     )
     SELECT doc_id,
            (CAST('0x' || substr(md5(token), 1, 8) AS BIGINT) % 16) AS bucket,
@@ -1003,16 +1008,7 @@ def q_text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_langid_confusion",
     oracle=f"""
-    WITH scored AS (
-      SELECT doc_id, lang,
-             len(list_filter({_SQL_TOKENS},
-                 t -> list_contains(['the','and','of','is','a'], lower(t)))) AS en_hits,
-             len(list_filter({_SQL_TOKENS},
-                 t -> list_contains(['der','und','die','das','ist'], lower(t)))) AS de_hits,
-             len(list_filter({_SQL_TOKENS},
-                 t -> list_contains(['el','la','de','los','es'], lower(t)))) AS es_hits
-      FROM documents
-    ),
+    WITH {_SQL_LANGID_SCORED},
     pred AS (
       SELECT lang,
              CASE WHEN en_hits >= de_hits AND en_hits >= es_hits AND en_hits > 0 THEN 'en'
@@ -1051,7 +1047,7 @@ _LEX_TOP_K = 3
 # (plans/similarity.py q_sim_rrf_fusion).
 _SQL_LEX_SCORED = f"""
     lex_toks AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents),
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents),
     lex_tf AS (SELECT doc_id, token, COUNT(*) AS cnt FROM lex_toks GROUP BY 1, 2),
     lex_dl AS (SELECT doc_id, COUNT(*) AS doc_len FROM lex_toks GROUP BY 1),
     lex_df AS (SELECT token, COUNT(DISTINCT doc_id) AS n_docs FROM lex_toks GROUP BY 1),
@@ -1192,7 +1188,7 @@ def _lexical_scored_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH base AS (
       SELECT substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8' AS is_train,
-             {_SQL_TOKENS} AS t
+             {SQL_TOKENS} AS t
       FROM documents
     ), g0 AS (
       SELECT is_train,
@@ -1261,7 +1257,7 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_heaps_law",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, {_SQL_TOKENS} AS t FROM documents
+      SELECT doc_id, {SQL_TOKENS} AS t FROM documents
     ), per_doc AS (
       SELECT doc_id, len(t) AS n_toks FROM toks
     ), firsts AS (
@@ -1364,7 +1360,7 @@ def _bpe_cte_prefix(steps: int = BPE_STEPS) -> str:
     parts = [
         f"""words AS (
       SELECT token AS w, CAST(COUNT(*) AS BIGINT) AS wn
-      FROM (SELECT unnest({_SQL_TOKENS}) AS token FROM documents)
+      FROM (SELECT unnest({SQL_TOKENS}) AS token FROM documents)
       GROUP BY w)""",
         "w0 AS (SELECT ' ' || rtrim(regexp_replace(w, '(.)', '\\1  ', 'g'))"
         " || ' ' AS seq, wn FROM words)",
@@ -1556,7 +1552,7 @@ q_text_bpe_train_merges.__doc__ = q_text_bpe_train_merges.__doc__.replace(
     "q_text_classifier_linear",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
     ),
     agg AS (
       SELECT doc_id,
@@ -1620,7 +1616,7 @@ PHRASE = ("order", "fast")
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, t.token, t.pos
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS ts FROM documents),
+      FROM (SELECT doc_id, {SQL_TOKENS} AS ts FROM documents),
            LATERAL (SELECT unnest(ts) AS token,
                            generate_subscripts(ts, 1) AS pos) t
     )
@@ -1679,7 +1675,7 @@ _KN_MIN_C = 20
 @query(
     "q_text_kneser_ney",
     oracle=f"""
-    WITH toks AS (SELECT {_SQL_TOKENS} AS t FROM documents),
+    WITH toks AS (SELECT {SQL_TOKENS} AS t FROM documents),
     bg AS (
       SELECT split_part(b, ' ', 1) AS w1, split_part(b, ' ', 2) AS w2,
              CAST(COUNT(*) AS BIGINT) AS c

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import distinct_tokens, explode_tokens
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.scratch import scratch_dir
 from simplemapreduce_spark.sources.tables import load_table
 
@@ -27,6 +28,14 @@ _TOKENS_FROM_DOCS = """
     SELECT unnest(string_split_regex(text, '\\s+')) AS token
     FROM documents
 """
+
+# The word count of documents.text: the answer of both word-count queries.
+_SQL_WORD_COUNT = f"""
+    SELECT token, count(*) AS cnt
+    FROM ({_TOKENS_FROM_DOCS})
+    WHERE token <> ''
+    GROUP BY token
+    """
 
 
 @query(
@@ -46,12 +55,7 @@ def mr_sorted_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mr_word_count",
-    oracle=f"""
-    SELECT token, count(*) AS cnt
-    FROM ({_TOKENS_FROM_DOCS})
-    WHERE token <> ''
-    GROUP BY token
-    """,
+    oracle=_SQL_WORD_COUNT,
 )
 def mr_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical MR word count — groupBy(token).count(); Catalyst runs
@@ -88,12 +92,7 @@ def mr_key_value_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_source_text_whole_files",
-    oracle=f"""
-    SELECT token, count(*) AS cnt
-    FROM ({_TOKENS_FROM_DOCS})
-    WHERE token <> ''
-    GROUP BY token
-    """,
+    oracle=_SQL_WORD_COUNT,
 )
 def q_source_text_whole_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole-file input contract through the gate:
@@ -151,10 +150,10 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_mr_compat_inverted_index",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT DISTINCT doc_id,
-             unnest(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) AS token
+             unnest({SQL_TOKENS}) AS token
       FROM documents
     )
     SELECT token,

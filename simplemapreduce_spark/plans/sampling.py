@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.text import tokens
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.sources.tables import load_table
 
 
@@ -72,10 +73,10 @@ def q_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pipeline_training_data",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS t,
+             {SQL_TOKENS} AS t,
              md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
       FROM documents
     ),
@@ -195,7 +196,7 @@ N_SHARDS = 8
       SELECT doc_id,
              CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
                % {N_SHARDS} AS shard,
-             len(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) AS n_tokens
+             len({SQL_TOKENS}) AS n_tokens
       FROM documents
     )
     SELECT shard,

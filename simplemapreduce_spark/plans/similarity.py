@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.functions.vectors import cosine_similarity
+from simplemapreduce_spark.functions.vectors import cosine_similarity, l2_norm, sq_l2, sq_l2_sql
 from simplemapreduce_spark.sources.tables import ensure_parallelism, load_table
 
 TOP_K = 5
@@ -121,15 +121,31 @@ def _sign_bucket_col() -> F.Column:
     return out
 
 
-@query(
-    "q_sim_topk_lsh_bucketed",
-    oracle=f"""
-    WITH v AS (
+# ``v``: every embedding with its sign bucket; ``q``: the sampled
+# queries (the first 4 * N_QUERIES vectors).
+_SQL_BUCKETED_QUERIES = f"""v AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
              {_sign_bucket_sql()} AS bucket
       FROM embeddings
     ),
-    q AS (SELECT vec_id AS query_id, e AS qe, bucket FROM v WHERE vec_id < {N_QUERIES * 4}),
+    q AS (SELECT vec_id AS query_id, e AS qe, bucket FROM v WHERE vec_id < {N_QUERIES * 4})"""
+
+# ... and ``gt``: each sampled query's exact top 3 by rounded cosine.
+_SQL_EXACT_TOP3 = f"""{_SQL_BUCKETED_QUERIES},
+    gt AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT q.query_id, v.vec_id AS neighbor_id,
+               ROW_NUMBER() OVER (PARTITION BY q.query_id
+                  ORDER BY ROUND(list_cosine_similarity(q.qe, v.e), 4) DESC, v.vec_id) AS rank
+        FROM q JOIN v ON v.vec_id <> q.query_id
+      ) WHERE rank <= 3
+    )"""
+
+
+@query(
+    "q_sim_topk_lsh_bucketed",
+    oracle=f"""
+    WITH {_SQL_BUCKETED_QUERIES},
     scored AS (
       SELECT q.query_id, v.vec_id AS neighbor_id,
              ROUND(list_cosine_similarity(q.qe, v.e), 4) AS cos_sim
@@ -192,13 +208,7 @@ def q_sim_l2_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
-    l2 = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("qe"), F.col("e"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    l2 = F.sqrt(sq_l2(F.col("qe"), F.col("e")))
     scored = v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id", F.col("vec_id").alias("neighbor_id"), F.round(l2, 4).alias("l2_dist")
     )
@@ -243,10 +253,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
         F.col("vec_id").alias("cid"), F.col("e").alias("ce")
     )
     cents = cent.agg(F.collect_list(F.struct("cid", "ce")).alias("cents"))
-    d_expr = (
-        "round(sqrt(aggregate(zip_with(e, c.ce, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x)), 4)"
-    )
+    d_expr = f"round(sqrt({sq_l2_sql('e', 'c.ce')}), 4)"
     cells_sorted = f"array_sort(transform(cents, c -> struct({d_expr} as d, c.cid as cid)))"
     assign = memo_persist(
         v.crossJoin(F.broadcast(cents)).select(
@@ -346,7 +353,7 @@ def _km_assign_sql(out: str, cents: str) -> str:
 
 
 def _km_update_sql(out: str, asg: str) -> str:
-    """One update_centroids stage (operators/kmeans.py:69) as SQL CTEs."""
+    """One update_centroids stage (operators/kmeans.py) as SQL CTEs."""
     return f"""
     {out}_m AS (
       SELECT cell, pos, ROUND(AVG(val), 6) AS m
@@ -451,8 +458,6 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = assign_cells(v, cent).select("vec_id", "e", "cell")
     # probe: each query's N_PROBE nearest TRAINED centroids
     q = v.filter(F.col("vec_id") < N_QUERIES)
-    from simplemapreduce_spark.operators.kmeans import _sq_l2
-
     probe_w = W.partitionBy("query_id").orderBy(F.col("pd"), F.col("cell"))
     probes = (
         q.join(F.broadcast(cent))
@@ -460,7 +465,7 @@ def q_sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"),
             F.col("e").alias("qe"),
             F.col("cid").alias("cell"),
-            F.round(_sq_l2(F.col("e"), F.col("ce")), 8).alias("pd"),
+            F.round(sq_l2(F.col("e"), F.col("ce")), 8).alias("pd"),
         )
         .withColumn("prk", F.row_number().over(probe_w))
         .filter(F.col("prk") <= N_PROBE)
@@ -774,7 +779,7 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the exact baseline use. Training, encoding, and the query
     # tables all see normalized vectors; the final cosine re-rank is
     # scale-invariant either way.
-    norm = F.sqrt(F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x))
+    norm = l2_norm(F.col("e"))
     vn = v.select("vec_id", F.transform("e", lambda x: x / norm).alias("e"))
     dim_sub = 64 // M_SUB
 
@@ -818,13 +823,6 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _sub(col, m):
         return F.slice(col, m * dim_sub + 1, dim_sub)
 
-    def _d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # Encode the corpus: per subspace, row-local argmin over the
     # broadcast codebook, rounded like operators/kmeans.assign_cells so
     # partition-order float jitter cannot flip a code. The stored code
@@ -835,7 +833,7 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = F.transform(
             F.element_at("books", m + 1),
             lambda c, i: F.struct(
-                F.round(_d2(_sub(F.col("e"), m), c["ce"]), 8).alias("d2"),
+                F.round(sq_l2(_sub(F.col("e"), m), c["ce"]), 8).alias("d2"),
                 i.alias("pos"),
             ),
         )
@@ -856,7 +854,7 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def tab_for(m):
         return F.transform(
             F.element_at("books", m + 1),
-            lambda c: F.round(_d2(_sub(F.col("e"), m), c["ce"]), 8),
+            lambda c: F.round(sq_l2(_sub(F.col("e"), m), c["ce"]), 8),
         )
 
     q = vn.filter(F.col("vec_id") < N_QUERIES)
@@ -1129,20 +1127,7 @@ def _lsh_eval_top3(spark: SparkSession, sf_dir: str, gt_rank: str, approx_rank: 
 @query(
     "q_sim_lsh_recall_eval",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-             {_sign_bucket_sql()} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT vec_id AS query_id, e AS qe, bucket FROM v WHERE vec_id < {N_QUERIES * 4}),
-    gt AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                  ORDER BY ROUND(list_cosine_similarity(q.qe, v.e), 4) DESC, v.vec_id) AS rank
-        FROM q JOIN v ON v.vec_id <> q.query_id
-      ) WHERE rank <= 3
-    ),
+    WITH {_SQL_EXACT_TOP3},
     approx AS (
       SELECT query_id, neighbor_id FROM (
         SELECT q.query_id, v.vec_id AS neighbor_id,
@@ -1203,20 +1188,7 @@ def q_sim_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sim_hard_negatives",
     oracle=f"""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-             {_sign_bucket_sql()} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT vec_id AS query_id, e AS qe, bucket FROM v WHERE vec_id < {N_QUERIES * 4}),
-    gt AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                  ORDER BY ROUND(list_cosine_similarity(q.qe, v.e), 4) DESC, v.vec_id) AS rank
-        FROM q JOIN v ON v.vec_id <> q.query_id
-      ) WHERE rank <= 3
-    ),
+    WITH {_SQL_EXACT_TOP3},
     bucketed AS (
       SELECT q.query_id, v.vec_id AS neighbor_id,
              ROUND(list_cosine_similarity(q.qe, v.e), 4) AS cos_sim

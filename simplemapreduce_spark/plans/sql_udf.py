@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
+from simplemapreduce_spark.oracle_sql import SQL_TOKENS
 from simplemapreduce_spark.sources.tables import load_table
 
 
@@ -196,7 +197,7 @@ _CHUNK_SZ = 40
     oracle=f"""
     WITH d AS (
       SELECT doc_id,
-             len(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))
+             len({SQL_TOKENS})
                AS n_toks
       FROM documents
     ), chunks AS (

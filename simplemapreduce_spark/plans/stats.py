@@ -568,6 +568,16 @@ def _ab_cents_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ``p``: each purchase's arm and integer-cents amount, the rows that
+# _ab_cents_counts counts.
+_SQL_AB_PURCHASES = """p AS (
+      SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
+                  THEN 'A' ELSE 'B' END AS variant,
+             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      FROM events WHERE event_type = 'purchase'
+    )"""
+
+
 @query(
     "q_ab_test_ztest",
     oracle="""
@@ -728,13 +738,8 @@ def q_feature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ks_two_sample",
-    oracle="""
-    WITH p AS (
-      SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-                  THEN 'A' ELSE 'B' END AS variant,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'
-    ),
+    oracle=f"""
+    WITH {_SQL_AB_PURCHASES},
     per_value AS (
       SELECT cents,
              SUM(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS a,
@@ -857,13 +862,8 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_mannwhitney_u",
-    oracle="""
-    WITH p AS (
-      SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-                  THEN 'A' ELSE 'B' END AS variant,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'
-    ),
+    oracle=f"""
+    WITH {_SQL_AB_PURCHASES},
     pv AS (
       SELECT cents,
              SUM(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS a,

@@ -15,9 +15,8 @@ from pyspark.sql import functions as F
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import SESSION_GAP_MICROS, date_trunc_ntz, epoch_micros
+from simplemapreduce_spark.oracle_sql import SQL_SESSION_MARKS, SQL_SESSION_WINDOW
 from simplemapreduce_spark.sources.tables import load_table
-
-_GAP_MICROS = SESSION_GAP_MICROS  # 30-minute session gap (shared constant)
 
 
 @query(
@@ -75,25 +74,7 @@ def q_ts_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_session_window",
-    oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > {_GAP_MICROS}
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT *, SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM marked
-    )
-    SELECT user_id,
-           MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL '30 minutes' AS session_end,
-           COUNT(*) AS n_events
-    FROM numbered GROUP BY user_id, sess
-    """,
+    oracle=SQL_SESSION_WINDOW,
 )
 def q_ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window (30-min gap). Spark merges events whose
@@ -119,12 +100,7 @@ def q_ts_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH marked AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN LAG(ts) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > {_GAP_MICROS}
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT *, SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                    {SQL_SESSION_MARKS}
                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
       FROM marked
     )
@@ -141,7 +117,7 @@ def q_ts_sessionize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros = epoch_micros("ts")
     is_new = F.when(
         F.lag("ts").over(w).isNull()
-        | ((micros - F.lag(micros).over(w)) > F.lit(_GAP_MICROS)),
+        | ((micros - F.lag(micros).over(w)) > F.lit(SESSION_GAP_MICROS)),
         1,
     ).otherwise(0)
     sess = F.sum(is_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))

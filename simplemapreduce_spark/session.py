@@ -90,10 +90,10 @@ def scoped_conf(spark: SparkSession, key: str, value: object) -> Iterator[None]:
     process-wide lock serializes all scoped overrides: two threads
     scoping the same key cannot interleave their set/restore pairs and
     leave the wrong value behind. The lock is reentrant because scopes
-    nest (the transformWithState query scopes its state-store provider
-    around a drain that scopes the shuffle partitions). A streaming
-    query needs its override only around ``start()``: StreamExecution
-    clones the session conf synchronously inside it."""
+    nest (``tools/conf_invariance_sweep.run`` scopes a conf around a
+    query whose stream drain scopes ``spark.sql.shuffle.partitions``).
+    A streaming query needs its override only around ``start()``:
+    StreamExecution clones the session conf synchronously inside it."""
     if value is None:
         yield
         return

@@ -22,20 +22,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from simplemapreduce_spark.catalog import query
-from simplemapreduce_spark.session import scoped_conf
+from simplemapreduce_spark.oracle_sql import SQL_SESSION_MARKS
 from simplemapreduce_spark.streaming.windows import run_stream_to_table, stream_events
-
-
-def _last_emission_per_user(out: DataFrame) -> DataFrame:
-    """The final (cumulative) emission per user of a running-totals
-    stream: the row with the largest ``n_events``. Over a finite
-    replay it equals the batch aggregate."""
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "total_value_cents")
-    )
 
 
 _COUNT_OUT = T.StructType(
@@ -96,93 +84,15 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             update, _COUNT_OUT, _COUNT_STATE, "append", GroupStateTimeout.NoTimeout
         )
     )
-    return _last_emission_per_user(run_stream_to_table(updates, "append", sf_dir))
-
-
-_TWS_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("n_events", T.LongType(), True),
-        T.StructField("total_value_cents", T.LongType(), True),
-    ]
-)
-
-
-def tws_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals via transformWithStateInPandas — the
-    Spark 4 arbitrary-stateful API (typed state handles on a RocksDB
-    state store) succeeding applyInPandasWithState. Same contract as
-    q_stream_stateful_counts; over the finite replay the last emission
-    per user equals the batch aggregate
-    (``SELECT user_id, COUNT(*), SUM(cents) FROM events GROUP BY 1``).
-
-    NOT registered in the catalog: the TWS state-server protocol
-    requires ``google.protobuf``, which this container does not ship
-    (and installs are off-limits), so the operator cannot execute
-    here. The implementation is complete and the contract is pinned by
-    ``tests/test_streaming_incremental.py::test_tws_running_totals``,
-    which runs wherever protobuf exists and skips cleanly otherwise —
-    the applyInPandasWithState twin above carries the oracled gate in
-    this environment.
-
-    Scale design: ValueState per key in RocksDB — state is spillable
-    and checkpointed incrementally (changelog), the configuration that
-    holds for billions of keys where the default HDFS-backed store
-    (full-snapshot, heap-resident) cannot."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
+    # The last emission per user is the one with the largest count; over
+    # the finite replay it equals the batch aggregate.
+    out = run_stream_to_table(updates, "append", sf_dir)
+    last = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        out.withColumn("rn", F.row_number().over(last))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "n_events", "total_value_cents")
     )
-
-    from simplemapreduce_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(spark)
-
-    state_schema = T.StructType(
-        [T.StructField("n", T.LongType(), True), T.StructField("cents", T.LongType(), True)]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            from simplemapreduce_spark.functions.money import cents_i64
-
-            n, cents = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    cents += cents_i64(pdf["value"].to_numpy())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    updates = (
-        stream_events(spark, sf_dir)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=_TWS_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    # transformWithState requires the RocksDB provider (runtime-settable);
-    # scope the override to this stream so unrelated streaming queries in
-    # the shared session keep the default provider.
-    with scoped_conf(
-        spark,
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    ):
-        out = run_stream_to_table(updates, "append", sf_dir)
-    return _last_emission_per_user(out)
 
 
 _SESS_OUT = T.StructType(
@@ -207,16 +117,11 @@ _SESS_DELAY_US = 30 * 60 * 1_000_000  # watermark delay (= the gap here)
 
 @query(
     "q_stream_sessionize_stateful",
-    oracle="""
+    oracle=f"""
     WITH marked AS (
       SELECT user_id, ts, event_id,
              CASE WHEN LAG(epoch_us(ts)) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT *, SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                    {SQL_SESSION_MARKS}
                                   ROWS UNBOUNDED PRECEDING) AS sess
       FROM marked
     ), s AS (

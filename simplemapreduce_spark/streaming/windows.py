@@ -39,6 +39,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from simplemapreduce_spark.catalog import query
 from simplemapreduce_spark.functions.time import event_time_to_ntz, ntz_as_event_time
+from simplemapreduce_spark.oracle_sql import SQL_SESSION_WINDOW
 from simplemapreduce_spark.session import scoped_conf
 
 
@@ -145,14 +146,19 @@ def run_stream_to_table(df: DataFrame, output_mode: str, sf_dir: str) -> DataFra
     """Execute a (finite) streaming DataFrame over the ``sf_dir``
     fixtures to completion into a memory sink, with its state
     partitions sized to the source; return the materialized result as
-    a batch DataFrame."""
+    a batch DataFrame.
+
+    The returned frame holds the sink's rows itself, so the sink's
+    temporary view is dropped: the session keeps no table per drain."""
     spark = df.sparkSession
     name = _drain(
         spark,
         df.writeStream.format("memory").outputMode(output_mode),
         stream_state_partitions(spark, sf_dir),
     )
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -313,25 +319,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_session_window",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR epoch_us(ts) - LAG(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT *, SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM marked
-    )
-    SELECT user_id,
-           MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL '30 minutes' AS session_end,
-           COUNT(*) AS n_events
-    FROM numbered GROUP BY user_id, sess
-    """,
+    oracle=SQL_SESSION_WINDOW,
 )
 def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session windows (30-minute inactivity gap) per user.
@@ -456,9 +444,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_stream_stream_left_outer",
-    oracle="""
+# Every click, with each purchase of its user within the next 30 minutes
+# (``matched``), plus the clicks left unmatched once the final global
+# watermark ``wm`` has passed their window: the batch answer of the
+# left-outer stream-stream join and the first half of the full-outer one.
+_SQL_CLICKS_LEFT_OUTER = """
     WITH wm AS (
       SELECT LEAST(
         (SELECT max(ts) FROM events WHERE event_type = 'click'),
@@ -485,7 +475,12 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
           AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
       )
-    """,
+    """
+
+
+@query(
+    "q_stream_stream_left_outer",
+    oracle=_SQL_CLICKS_LEFT_OUTER,
 )
 def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER join: every click, with its purchase
@@ -516,12 +511,17 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_stream_dedup",
-    oracle="""
+# Both dedup streams keep every distinct (user, event type) pair, so the
+# per-type count of the sink equals this batch count.
+_SQL_DISTINCT_USERS_PER_TYPE = """
     SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct_users
     FROM events GROUP BY event_type
-    """,
+    """
+
+
+@query(
+    "q_stream_dedup",
+    oracle=_SQL_DISTINCT_USERS_PER_TYPE,
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication: dropDuplicates on (user_id, event_type)
@@ -741,10 +741,7 @@ def q_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_dedup_watermarked",
-    oracle="""
-    SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct_users
-    FROM events GROUP BY event_type
-    """,
+    oracle=_SQL_DISTINCT_USERS_PER_TYPE,
 )
 def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-state streaming dedup: dropDuplicatesWithinWatermark
@@ -851,7 +848,9 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             _time.sleep(0.2)
     finally:
         q.stop()
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -890,34 +889,7 @@ def q_stream_stream_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_stream_full_outer",
-    oracle="""
-    WITH wm AS (
-      SELECT LEAST(
-        (SELECT max(ts) FROM events WHERE event_type = 'click'),
-        (SELECT max(ts) FROM events WHERE event_type = 'purchase')
-      ) - INTERVAL 1 HOUR AS w
-    ),
-    matched AS (
-      SELECT c.user_id,
-             c.event_id AS click_id, p.event_id AS purchase_id,
-             date_diff('second', c.ts, p.ts) AS secs_to_purchase
-      FROM events c JOIN events p
-        ON p.user_id = c.user_id
-       AND c.event_type = 'click' AND p.event_type = 'purchase'
-       AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-    )
-    SELECT user_id, click_id, purchase_id, secs_to_purchase FROM matched
-    UNION ALL
-    SELECT c.user_id, c.event_id, NULL, NULL
-    FROM events c, wm
-    WHERE c.event_type = 'click'
-      AND c.ts + INTERVAL 30 MINUTE < wm.w
-      AND NOT EXISTS (
-        SELECT 1 FROM events p
-        WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
-          AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-      )
-    UNION ALL
+    oracle=_SQL_CLICKS_LEFT_OUTER + """UNION ALL
     SELECT p.user_id, NULL, p.event_id, NULL
     FROM events p, wm
     WHERE p.event_type = 'purchase'

@@ -107,33 +107,6 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir, multi_file_events):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_tws_running_totals(spark, sf_dir):
-    """transformWithStateInPandas twin of the stateful-counts operator:
-    final emission per user equals the batch aggregate. Requires the
-    TWS state-server protocol dependency (google.protobuf), absent in
-    some environments — skip, not fail, there."""
-    pytest.importorskip("google.protobuf")
-    from simplemapreduce_spark.streaming.stateful import tws_running_totals
-
-    got = {
-        (r.user_id, r.n_events, r.total_value_cents)
-        for r in tws_running_totals(spark, sf_dir).collect()
-    }
-    want = {
-        (r.user_id, r.n_events, r.total_value_cents)
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-            ).alias("total_value_cents"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_checkpoint_restart_resumes_exactly_once(spark, sf_dir, multi_file_events, tmp_path):
     """Kill a checkpointed stream after the first micro-batch, restart
     it with the same checkpoint, and the final counts still equal the
@@ -478,3 +451,24 @@ def test_sessionize_late_event_extends_envelope_not_shrinks_last(spark, tmp_path
     assert all(r.start_us <= r.last_us for r in rows), rows
     got = {(r.user_id, r.start_us, r.last_us, r.n_events, r.closed_by) for r in rows}
     assert got == {(1, base_us - 10 * minute, base_us + 5 * minute, 3, "gap")}, got
+
+
+def test_drains_leave_no_sink_view(spark, sf_dir):
+    """A memory-sink drain drops its temporary view once the result
+    frame has resolved, so repeated drains leave no sink table in the
+    session, and each still returns the same rows."""
+    from simplemapreduce_spark.streaming.windows import (
+        q_source_python_stream,
+        q_stream_tumbling,
+    )
+
+    runs = [sorted(map(tuple, q_stream_tumbling(spark, sf_dir).collect())) for _ in range(3)]
+    counter = sorted(map(tuple, q_source_python_stream(spark, sf_dir).collect()))
+    assert runs[0] and runs[0] == runs[1] == runs[2]
+    assert [r[0] for r in counter] == [0, 1, 2, 3, 4]
+    sinks = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith(("smr_stream_", "smr_pyds_stream_"))
+    ]
+    assert sinks == []
